@@ -1,0 +1,1 @@
+"""Repo benchmark package; entry point: perfbench/run.py."""
