@@ -90,10 +90,12 @@ def main(argv: list[str] | None = None) -> int:
     ap.add_argument(
         "--incremental-stats",
         action="store_true",
-        help="file-delta incremental column-stats validation "
-        "(plans/incremental_stats.py): partitions whose file set only GREW "
-        "scan just the added files and merge the stored mergeable stats; "
-        "unchanged partitions scan nothing; rewrites fall back to full",
+        help="file-delta incremental validation of the five data rules "
+        "(column_stats, token_bounds, uniqueness, referential, drift; "
+        "plans/incremental_stats.py): partitions whose file set only GREW "
+        "scan just the added files and merge them into the stored mergeable "
+        "summaries; unchanged partitions scan nothing; rewrites fall back "
+        "to full",
     )
     ap.add_argument(
         "--suggest-from-parts",
@@ -231,6 +233,7 @@ def main(argv: list[str] | None = None) -> int:
                 if os.path.exists(allowed_path)
                 else None
             ),
+            params=json.loads(args.params) if args.params else None,
         )
         r = suite["column_stats"]
         out = {

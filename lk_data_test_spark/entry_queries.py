@@ -15,6 +15,8 @@ the SQL so the driver's sorted-column value-hash lines up.
 
 from __future__ import annotations
 
+import os
+import stat
 from typing import Callable
 
 from pyspark.sql import DataFrame, SparkSession, Window
@@ -38,18 +40,32 @@ def query(name: str, sql: str | None):
 
 
 # Fan-out floor: a single-reader input below this size is CHEAPER to leave
-# alone — the r6 interleaved A/B (scripts/ab_fanout_r06.py) measured the
+# alone — the r6 interleaved A/B (OPTIMIZATION_r06.md) measured the
 # blanket repartition-after-read at 1.3-2.4x SLOWER across the headline set
 # at sf0.1 (the round-robin exchange + its sort-before-repartition cost more
 # than the single-core map work it parallelizes on MB-scale tables). Above
 # the floor the classic §2.5 failure mode dominates instead: one unsplittable
 # multi-hundred-MB file serializing the whole plan behind one reader.
 _FAN_MIN_BYTES = 64 << 20
-# kill-switch for A/B measurement (scripts/ab_fanout_r06.py)
-_FAN_ENABLED = True
+
+# table path -> (file stamp, fan out?). The probe lists and sizes every
+# input file and asks the JVM for the scan's split count, so it runs once
+# per table version instead of on every read. Concurrent readers may both
+# probe a new version; they store the same decision.
+_FAN_DECISIONS: dict[str, tuple[tuple, bool]] = {}
 
 
-def _fan_out(spark: SparkSession, df: DataFrame) -> DataFrame:
+def _file_stamp(path: str) -> tuple:
+    """Identity of a table's files: any rewrite changes it."""
+    st = os.stat(path)
+    if not stat.S_ISDIR(st.st_mode):
+        return (st.st_ino, st.st_size, st.st_mtime_ns)
+    return tuple(sorted(
+        (e.name, e.stat().st_size, e.stat().st_mtime_ns) for e in os.scandir(path)
+    ))
+
+
+def _fan_out(spark: SparkSession, df: DataFrame, path: str) -> DataFrame:
     """Input-parallelism guard (optimization guide §2.5, "one huge
     unsplittable file → repartition immediately after the read"): the SF dirs
     ship each table as ONE parquet file with ONE row group, so a bare scan is
@@ -61,28 +77,30 @@ def _fan_out(spark: SparkSession, df: DataFrame) -> DataFrame:
     this is a no-op at real scale and the decision derives from the input
     (bytes + split count), never a local constant. Catalyst pushes filters
     below the repartition, so PushedFilters still reach the scan."""
-    if not _FAN_ENABLED:
-        return df
-    try:
-        files = df.inputFiles()
-        import os as _os
-
-        total = sum(
-            _os.path.getsize(f[len("file:"):] if f.startswith("file:") else f)
-            for f in files
-        )
-    except Exception:
-        return df
-    if total < _FAN_MIN_BYTES:
-        return df
     target = spark.sparkContext.defaultParallelism
-    if df.rdd.getNumPartitions() >= target:
+    try:
+        stamp = (_file_stamp(path), target)
+    except OSError:  # not a local path: nothing to size
         return df
-    return df.repartition(target)
+    known = _FAN_DECISIONS.get(path)
+    if known is not None and known[0] == stamp:
+        fan = known[1]
+    else:
+        try:
+            total = sum(
+                os.path.getsize(f[len("file:"):] if f.startswith("file:") else f)
+                for f in df.inputFiles()
+            )
+        except OSError:
+            return df
+        fan = total >= _FAN_MIN_BYTES and df.rdd.getNumPartitions() < target
+        _FAN_DECISIONS[path] = (stamp, fan)
+    return df.repartition(target) if fan else df
 
 
 def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    return _fan_out(spark, spark.read.parquet(f"{sf_dir}/{name}.parquet"))
+    path = f"{sf_dir}/{name}.parquet"
+    return _fan_out(spark, spark.read.parquet(path), path)
 
 
 def _dec(c, scale: int = 4):
@@ -3333,7 +3351,7 @@ def incremental_delta_verdicts(spark, sf_dir):
     import tempfile
 
     from .datagen import GenConfig, generate
-    from .plans.incremental_stats import IncrementalStatsValidator
+    from .plans.incremental_stats import run_incremental_suite
     from .sources.catalog import PartitionedTable
 
     cfg = GenConfig(**_INCR_CFG)
@@ -3341,8 +3359,8 @@ def incremental_delta_verdicts(spark, sf_dir):
     try:
         generate(spark, work, cfg)
         table = PartitionedTable(f"{work}/sequences")
-        store = f"{work}/state.json"
-        runs = [IncrementalStatsValidator(table, store).run(spark)]
+        state_dir = f"{work}/_manifest"
+        runs = [run_incremental_suite(spark, table, state_dir)["column_stats"]]
         extra = [
             (f"A{i:04d}", [1, 2, 3], 3, "cases")
             for i in range(_INCR_APPEND_CLEAN)
@@ -3362,8 +3380,8 @@ def incremental_delta_verdicts(spark, sf_dir):
             .write.mode("append")
             .parquet(f"{work}/sequences/part_id=0")
         )
-        # a fresh validator instance proves the state round-trips via disk
-        runs.append(IncrementalStatsValidator(table, store).run(spark))
+        # the second run reads its state back from the store on disk
+        runs.append(run_incremental_suite(spark, table, state_dir)["column_stats"])
         out = []
         for run_id, r in enumerate(runs, start=1):
             for pid in sorted(r["parts"]):

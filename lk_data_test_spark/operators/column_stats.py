@@ -32,6 +32,22 @@ RULE_ID = "column_stats"
 
 DEFAULTS = {"n_salt": 16, "bucket_width": 64, "max_null_rate": 0.0}
 
+# the stats-row counters that are row-level defects
+BAD_FIELDS = (
+    "null_doc_id", "null_source", "null_n_tok", "null_tokens",
+    "nonpos_n_tok", "len_mismatch",
+)
+
+
+def judge(stats, max_null_rate: float) -> tuple[bool, float]:
+    """The column_stats judge, shared by the batch rule and the incremental
+    store: one partition's stats row (a Row, a stats dict, or None for a
+    partition with no rows) -> (passed, metric = total defect count)."""
+    if stats is None:
+        return 0.0 <= max_null_rate, 0.0
+    bad = float(sum(int(stats[k]) for k in BAD_FIELDS))
+    return bad <= max_null_rate, bad
+
 
 def _cnt(cond) -> F.Column:
     return F.sum(F.when(cond, 1).otherwise(0))
@@ -216,10 +232,6 @@ def evaluate(df: DataFrame, ctx: RuleContext) -> RuleResult:
     # the earlier form ran the skeleton-join plan twice (once for the
     # `failing` collect here, once for the runner's verdict collect), i.e.
     # two scheduled jobs per suite run for 32 rows of driver state.
-    _bad_fields = (
-        "null_doc_id", "null_source", "null_n_tok", "null_tokens",
-        "nonpos_n_tok", "len_mismatch",
-    )
     by_part = {int(r["part_id"]): r for r in stats.collect()}
     part_ids = (
         sorted(int(x) for x in ctx.part_ids)
@@ -229,9 +241,7 @@ def evaluate(df: DataFrame, ctx: RuleContext) -> RuleResult:
     verdict_rows = []
     failing = []
     for pid in part_ids:
-        r = by_part.get(pid)
-        bad = float(sum(int(r[k]) for k in _bad_fields)) if r is not None else 0.0
-        passed = bad <= p["max_null_rate"]
+        passed, bad = judge(by_part.get(pid), p["max_null_rate"])
         if not passed:
             failing.append(pid)
         verdict_rows.append(

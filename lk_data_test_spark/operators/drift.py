@@ -104,6 +104,58 @@ def _ks_from_hist(values: np.ndarray, counts: np.ndarray, quantiles: np.ndarray)
     )
 
 
+_GROUP_COLS = ("part_id", "source", "ks", "l1", "n_docs", "score")
+
+
+def profile_maps(prof_rows) -> tuple[dict, dict]:
+    """Collected reference-profile rows -> (source -> n_tok quantiles,
+    source -> {token: expected relative frequency})."""
+    quantiles = {
+        r["source"]: np.asarray(r["n_tok_quantiles"], dtype=np.float64)
+        for r in prof_rows
+    }
+    token_freq = {r["source"]: dict(r["token_freq"]) for r in prof_rows}
+    return quantiles, token_freq
+
+
+def group_scorer(quantiles: dict, token_freq: dict, p: dict):
+    """The drift judge, shared by the batch rule (per shuffled group) and
+    the incremental store (per stored partials). Returns
+    ``score(source, ntok_keys, ntok_cnts, tok_keys, tok_cnts)`` ->
+    ``(ks, l1, n_docs, score)`` for one (part_id, source) group's merged
+    kind-0/kind-1 partials, or None when the group has fewer than
+    ``min_docs`` rows (too noisy to judge). ``score > 1`` fails the group."""
+    ks_fn = _ks_from_tdigest if p["method"] == "tdigest" else _ks_from_hist
+    ref_tokens = sorted({t for m in token_freq.values() for t in m})
+    ref_idx = {t: i for i, t in enumerate(ref_tokens)}
+    ks_thr, l1_thr = float(p["ks_threshold"]), float(p["l1_threshold"])
+    min_docs = float(p["min_docs"])
+
+    def score(source, ntok_keys, ntok_cnts, tok_keys, tok_cnts):
+        keys = np.asarray(ntok_keys, dtype=np.int64)
+        cnts = np.asarray(ntok_cnts, dtype=np.int64)
+        n_docs = float(cnts.sum())
+        if n_docs < min_docs:
+            return None
+        q = quantiles.get(source)
+        ks = ks_fn(keys, cnts, q) if q is not None and len(keys) else 0.0
+        # total token mass (incl. out-of-profile tokens) from the histogram:
+        # sum(n_tok * count) — no second scan needed
+        total = float((keys * cnts).sum())
+        obs = np.zeros(len(ref_tokens))
+        for tok, c in zip(tok_keys, tok_cnts):
+            i = ref_idx.get(int(tok))
+            if i is not None:
+                obs[i] = float(c)
+        obs = obs / total if total > 0 else obs
+        ref = token_freq.get(source, {})
+        refv = np.array([ref.get(tk, 0.0) for tk in ref_tokens])
+        l1 = float(np.abs(obs - refv).sum())
+        return ks, l1, n_docs, max(ks / ks_thr, l1 / l1_thr)
+
+    return score
+
+
 def evaluate(df: DataFrame, ctx: RuleContext) -> RuleResult:
     p = {**DEFAULTS, **ctx.params.get(RULE_ID, {})}
     profiles = ctx.reference_profiles
@@ -159,52 +211,23 @@ def evaluate(df: DataFrame, ctx: RuleContext) -> RuleResult:
     else:
         # sane profile: ONE collect of the tiny dimension serves both the
         # quantile and frequency closures (no extra per-run driver jobs)
-        prof_rows = profiles.collect()
-        quantiles = {
-            r["source"]: np.asarray(r["n_tok_quantiles"], dtype=np.float64)
-            for r in prof_rows
-        }
-        token_freq = {r["source"]: dict(r["token_freq"]) for r in prof_rows}
-    ref_tokens = sorted({t for m in token_freq.values() for t in m})
+        quantiles, token_freq = profile_maps(profiles.collect())
 
     # ---- fused stage 2: KS + L1 per (part_id, source) ---------------------
-    ref_idx = {t: i for i, t in enumerate(ref_tokens)}
-    n_ref = len(ref_tokens)
-
-    ks_fn = _ks_from_tdigest if p["method"] == "tdigest" else _ks_from_hist
+    score = group_scorer(quantiles, token_freq, p)
 
     def score_fn(pdf: pd.DataFrame) -> pd.DataFrame:
-        part_id = int(pdf["part_id"].iloc[0])
         source = str(pdf["source"].iloc[0])
-        h = pdf[pdf["kind"] == 0]  # KIND_NTOK
-        t = pdf[pdf["kind"] == 1]  # KIND_TOKEN
-        n_docs = float(h["cnt"].sum())
-        q = quantiles.get(source)
-        ks = (
-            ks_fn(h["key"].to_numpy(), h["cnt"].to_numpy(), q)
-            if q is not None and len(h)
-            else 0.0
+        h = pdf[pdf["kind"] == KIND_NTOK]
+        t = pdf[pdf["kind"] == KIND_TOKEN]
+        g = score(
+            source, h["key"].to_numpy(), h["cnt"].to_numpy(),
+            t["key"].to_numpy(), t["cnt"].to_numpy(),
         )
-        # total token mass (incl. out-of-profile tokens) from the histogram:
-        # sum(n_tok * count) — no second scan needed
-        total = float((h["key"] * h["cnt"]).sum())
-        obs = np.zeros(n_ref)
-        for tok, c in zip(t["key"], t["cnt"]):
-            i = ref_idx.get(int(tok))
-            if i is not None:
-                obs[i] = float(c)
-        obs = obs / total if total > 0 else obs
-        ref = token_freq.get(source, {})
-        refv = np.array([ref.get(tk, 0.0) for tk in ref_tokens])
-        l1 = float(np.abs(obs - refv).sum())
+        if g is None:
+            return pd.DataFrame(columns=list(_GROUP_COLS))
         return pd.DataFrame(
-            {
-                "part_id": [part_id],
-                "source": [source],
-                "ks": [ks],
-                "l1": [l1],
-                "n_docs": [n_docs],
-            }
+            [(int(pdf["part_id"].iloc[0]), source) + g], columns=list(_GROUP_COLS)
         )
 
     # cached: tiny (one row per part x source) but expensive to produce;
@@ -212,15 +235,9 @@ def evaluate(df: DataFrame, ctx: RuleContext) -> RuleResult:
     per_group = (
         merged.groupBy("part_id", "source")
         .applyInPandas(
-            score_fn, "part_id int, source string, ks double, l1 double, n_docs double"
-        )
-        .filter(F.col("n_docs") >= F.lit(float(p["min_docs"])))
-        .withColumn(
-            "score",
-            F.greatest(
-                F.col("ks") / F.lit(p["ks_threshold"]),
-                F.col("l1") / F.lit(p["l1_threshold"]),
-            ),
+            score_fn,
+            "part_id int, source string, ks double, l1 double, n_docs double,"
+            " score double",
         )
         .cache()
     )

@@ -9,7 +9,8 @@ Scale design: an exact count-distinct over 10^12 doc_ids is a massive
 shuffle, so:
 1. SCREEN: per partition, ``count(*)`` vs ``approx_count_distinct(doc_id,
    rsd)`` (HLL++, map-side mergeable, no row shuffle). Partitions where the
-   HLL estimate is more than 2*rsd below the row count are *flagged*.
+   HLL estimate is more than 3*rsd below the row count are *flagged*
+   (``screen_flag``).
 2. EXACT (flagged partitions only, partition-pruned scan):
    a. group by ``xxhash64(doc_id)`` (8-byte shuffle key instead of the full
       string) and keep hashes with count > 1;
@@ -67,6 +68,21 @@ DEFAULTS = {
     # (~0.8% relative error at 14 — inside the rsd=0.01 band).
     "lg_k": 14,
 }
+
+
+def screen_flag(n_rows: int, est: float, rsd: float) -> bool:
+    """The local screen band, shared by the batch rule and the incremental
+    store: a partition whose distinct-id estimate falls more than 3*rsd
+    below its row count possibly holds duplicates."""
+    return est < n_rows * (1.0 - 3.0 * rsd)
+
+
+def cross_flag(total: int, sum_est: float, union_est: float, rsd: float) -> bool:
+    """The global-scope cross band: sum(per-partition estimates) minus the
+    estimate of the union of every sketch approximates the ids living in
+    more than one partition; each estimate carries ~rsd relative error, so
+    the band mirrors the local screen's 3*rsd."""
+    return (sum_est - union_est) > 3.0 * rsd * total
 
 
 def duplicate_doc_ids(df: DataFrame) -> DataFrame:
@@ -215,13 +231,9 @@ def _evaluate_global(df: DataFrame, ctx: RuleContext, p: dict) -> RuleResult:
         local_flagged = {
             int(r["part_id"])
             for r in rows
-            if float(r["est"]) < int(r["cnt"]) * (1.0 - 3.0 * rsd)
+            if screen_flag(int(r["cnt"]), float(r["est"]), rsd)
         }
-        # ids present in >1 partition shrink the union relative to the sum
-        # of per-partition estimates; each estimate carries ~rsd relative
-        # error, so the detection band mirrors the local screen's 3*rsd
-        cross_flag = (sum_est - union_est) > 3.0 * rsd * total
-        if cross_flag:
+        if cross_flag(total, sum_est, union_est, rsd):
             scoped = df  # duplicates may straddle ANY pair — no pruning
             exact_parts = _all_part_ids(df, ctx)
         elif local_flagged:
@@ -250,7 +262,8 @@ def _evaluate_global(df: DataFrame, ctx: RuleContext, p: dict) -> RuleResult:
         df, ctx, dups, {int(x) for x in exact_parts},
         "path=exact scope=global", "path=screen scope=global",
     )
-    return RuleResult(verdicts, violations)
+    # dups is cached: hand it to the runner as stats so the run releases it
+    return RuleResult(verdicts, violations, stats=dups)
 
 
 def evaluate(df: DataFrame, ctx: RuleContext) -> RuleResult:
@@ -274,9 +287,8 @@ def evaluate(df: DataFrame, ctx: RuleContext) -> RuleResult:
         )
         flagged = [
             r["part_id"]
-            for r in screen.filter(
-                F.col("approx") < F.col("cnt") * (1.0 - 3.0 * p["rsd"])
-            ).collect()
+            for r in screen.collect()
+            if screen_flag(int(r["cnt"]), float(r["approx"]), p["rsd"])
         ]
         scoped = df.filter(
             F.col("part_id").isin(flagged) if flagged else F.lit(False)
@@ -306,4 +318,5 @@ def evaluate(df: DataFrame, ctx: RuleContext) -> RuleResult:
         df, ctx, dups, {int(x) for x in exact_parts},
         "path=exact", "path=screen",
     )
-    return RuleResult(verdicts, violations)
+    # dups is cached: hand it to the runner as stats so the run releases it
+    return RuleResult(verdicts, violations, stats=dups)

@@ -1,72 +1,75 @@
-"""File-delta INCREMENTAL validation: validate only appended files, merge
-mergeable partition stats.
+"""File-delta INCREMENTAL validation: one store, one scan, the batch judges.
 
 The checkpoint manifest (plans/manifest.py) resumes at PARTITION granularity:
 a partition whose snapshot changed re-runs in full. Under append-only
 ingestion (the Iceberg norm — snapshots that only ADD data files) that
-re-reads every old row to re-derive statistics that are, for the stats rule,
-perfectly MERGEABLE: counts, null/defect counters and sums add; min/max take
-min/max; the bucketed n_tok histogram adds bucket-wise. This module is the
-fast path on top: per partition it stores the validated (file name -> size)
-set plus the merged stats row, and on re-run
+re-reads every old row to re-derive per-partition summaries that merge
+exactly. This module keeps, per partition, the validated (file name -> size)
+set plus one mergeable summary per data rule, all in ONE store file
+(``<manifest_dir>/incremental_state.json``, replaced atomically). Each run
+lists and classifies every partition once:
 
-  - skip   — file set unchanged: nothing read;
-  - delta  — pure append (every previously validated file still present with
-    the same size): ONLY the added files are scanned, one salted stats pass
-    over the union of all partitions' delta files, then a driver-side merge
-    of two tiny stats rows per partition;
-  - full   — anything else (rewrite, delete, size change, first sight):
-    correctness over cleverness, the whole partition re-runs.
+  - skip  — file set unchanged: nothing read;
+  - delta — pure append (every stored file still present with the same
+    size): ONLY the added files are scanned and their summaries merge into
+    the stored ones;
+  - full  — anything else (rewrite, delete, size change, first sight):
+    correctness over cleverness, the partition is summarized from scratch,
+    i.e. merged into the empty summary.
 
-The merged result is bit-identical to a full recompute (integer sums,
-min/max, exact histogram) — asserted by tests — so delta mode never trades
-accuracy, only I/O: an appended 1% of a partition costs 1% of the scan.
+The full and delta files are read as one frame: ONE SharedTokenStats pass
+(plans/shared.py, the batch suite's single decode of `tokens`), the salted
+column-stats pass over the narrow columns, and one narrow aggregate for the
+uniqueness sketch and the referential count. The summaries and their merges:
 
-Reference analog: the idempotent enrich re-runs that delete ONLY derived
-matches and keep everything else (`/root/reference/scripts/
-enrich_fackel_bibls.py:18-25`) — re-expressed as file-level lineage.
+  - column_stats: the stats row — sums add, min/max take min/max, the
+    bucketed n_tok histogram adds bucket-wise;
+  - drift: the shared token partials per (source, kind, key) — counts add;
+  - token_bounds, referential: per-row independent violation counts — add;
+  - uniqueness: the Datasketches HLL sketch of doc_id — unions (its row
+    count is the stats row's).
 
-Scale shape (10^12 rows): the per-partition state is one JSON-able stats row
-(a dozen longs + a bounded histogram map) and a file->size dict — O(files),
-never O(rows); the delta scan is one partition-pruned-by-construction job
-over exactly the added files; the merge is driver-side over n_parts tiny
-rows.
+Every merge is exact, so a merged summary equals a full recompute of the
+grown partition. Verdicts come from the judges the batch rules use
+(column_stats.judge, drift.group_scorer, uniqueness.screen_flag /
+cross_flag), so an incremental verdict equals a forced batch run over the
+same table (asserted by tests). A partition the merged uniqueness screen
+flags pays the exact hash-group pass over the WHOLE partition: duplicates
+can straddle old and new files, so no delta-only exact check is sound. In
+scope="global" one changed partition can flip an unchanged one's verdict,
+so any change re-judges every partition from the stored sketches (no scan).
 
-The whole data-rule suite is incremental here, because every rule's signal
-is (or has) a mergeable form:
-  - column_stats (IncrementalStatsValidator): sums add, min/max take
-    min/max, the bucketed histogram adds bucket-wise — merge is
-    bit-identical to a full recompute.
-  - drift (IncrementalDriftValidator): the shared token partials
-    (plans/shared.py — per (part, source) n_tok histogram + token counts)
-    are count rows that add; the KS/L1 scoring re-derives from the merged
-    table with the batch rule's own helpers.
-  - referential (IncrementalReferentialValidator): violations are per-row
-    independent — delta counts ADD to the stored metric.
-  - token_bounds (IncrementalTokenBoundsValidator): same per-row-independent
-    shape as referential — delta OOV-row counts ADD.
-  - uniqueness (IncrementalUniquenessValidator): the Datasketches HLL
-    sketch UNIONS (F.hll_sketch_agg / hll_union_agg) and the exact row
-    count adds; only a partition the MERGED screen flags pays the exact
-    cross-file hash-group pass (duplicates can straddle old and new files,
-    so no delta-only exact check is sound — the screen's job is making the
-    full pass rare). scope="global" adds the cross-partition screen
-    (sum of per-partition estimates vs the union of EVERY stored sketch)
-    with no scan at all on skip/delta runs.
-  - schema is metadata-only per file; the batch rule is already O(1).
+Drift and uniqueness memoize each partition's verdict under a fingerprint
+of their inputs (profiles and params), so an all-skip rerun submits no
+scan, no exact pass and no rescoring, and writes nothing; a params change
+rescores from the stored summaries without a scan. A store written under a
+different layout (other vocab bounds, histogram width, sketch size,
+reference token domain, or set of rules with inputs) is discarded: every
+partition runs full. The five per-rule stores of earlier versions
+(``incremental_{stats,drift,referential,token_bounds,uniqueness}.json``)
+are ignored, so the first run after upgrading is full.
+
+Scale shape (10^12 rows): per-partition state is O(files) plus bounded
+summaries, never O(rows); the scan reads exactly the full partitions and
+the added files; judging is driver-side over n_parts tiny summaries.
 """
 
 from __future__ import annotations
 
+import base64
+import hashlib
 import json
 import os
-import tempfile
 
 from pyspark.sql import SparkSession
 from pyspark.sql import functions as F
 
-from ..operators.column_stats import partition_stats
+from ..operators import column_stats, drift, token_bounds, uniqueness
 from ..sources.catalog import PartitionedTable
+from .manifest import write_json_atomic
+from .shared import KIND_NTOK, KIND_OOV_ROWS, KIND_TOKEN, SharedTokenStats
+
+STORE_NAME = "incremental_state.json"
 
 _SUM_FIELDS = (
     "row_count",
@@ -78,14 +81,6 @@ _SUM_FIELDS = (
     "len_mismatch",
     "sum_n_tok",
 )
-_BAD_FIELDS = (
-    "null_doc_id",
-    "null_source",
-    "null_n_tok",
-    "null_tokens",
-    "nonpos_n_tok",
-    "len_mismatch",
-)
 
 
 def _row_to_stats(row) -> dict:
@@ -95,6 +90,14 @@ def _row_to_stats(row) -> dict:
     d["n_tok_hist"] = {
         str(k): int(v) for k, v in (row["n_tok_hist"] or {}).items()
     }
+    return d
+
+
+def empty_stats() -> dict:
+    d = {k: 0 for k in _SUM_FIELDS}
+    d["min_n_tok"] = None
+    d["max_n_tok"] = None
+    d["n_tok_hist"] = {}
     return d
 
 
@@ -112,6 +115,43 @@ def merge_stats(a: dict, b: dict) -> dict:
     return out
 
 
+def merge_partials(a: list, b: list) -> list:
+    """Merge two drift partials lists of [source, kind, key, cnt] — counts
+    add per (source, kind, key); the result is sorted, so it is canonical."""
+    acc: dict[tuple, int] = {}
+    for src, kind, key, cnt in list(a) + list(b):
+        k = (src, int(kind), int(key))
+        acc[k] = acc.get(k, 0) + int(cnt)
+    return [[src, kind, key, cnt] for (src, kind, key), cnt in sorted(acc.items())]
+
+
+def empty_summary(drift: bool, referential: bool) -> dict:
+    """The identity of merge_summaries: a partition summary of no rows.
+    Drift partials / referential counts are held only when the run has the
+    reference profiles / allowed sources those rules need."""
+    e = {"stats": empty_stats(), "token_bounds": 0}
+    if drift:
+        e["partials"] = []
+    if referential:
+        e["referential"] = 0
+    return e
+
+
+def merge_summaries(a: dict, b: dict) -> dict:
+    """Merge two partition summaries of the same layout, rule by rule (the
+    uniqueness sketch aside: HLL sketches union in Spark). Exact,
+    associative and commutative, with empty_summary as identity."""
+    out = {
+        "stats": merge_stats(a["stats"], b["stats"]),
+        "token_bounds": a["token_bounds"] + b["token_bounds"],
+    }
+    if "partials" in a:
+        out["partials"] = merge_partials(a["partials"], b["partials"])
+    if "referential" in a:
+        out["referential"] = a["referential"] + b["referential"]
+    return out
+
+
 def _part_files(table: PartitionedTable, pid: int) -> dict[str, int]:
     pdir = os.path.join(table.path, f"part_id={pid}")
     return {
@@ -123,14 +163,15 @@ def _part_files(table: PartitionedTable, pid: int) -> dict[str, int]:
 
 def classify_partitions(
     table: PartitionedTable, entries: dict[str, dict]
-) -> tuple[dict[int, list[str]], list[int], list[int]]:
-    """File-level lineage triage shared by the incremental validators:
-    -> (delta part -> added file paths, full parts, skipped parts)."""
+) -> tuple[dict[int, dict[str, int]], dict[int, list[str]], list[int], list[int]]:
+    """File-level lineage triage, run once per incremental run -> (current
+    file -> size map per partition, delta part -> added file paths, full
+    parts, skipped parts)."""
+    files = {pid: _part_files(table, pid) for pid in table.partition_ids()}
     delta: dict[int, list[str]] = {}
     full: list[int] = []
     skip: list[int] = []
-    for pid in table.partition_ids():
-        cur = _part_files(table, pid)
+    for pid, cur in files.items():
         prior = entries.get(str(pid))
         if prior is None:
             full.append(pid)
@@ -145,746 +186,137 @@ def classify_partitions(
             ]
         else:  # rewrite / delete / size change -> full recompute
             full.append(pid)
-    return delta, full, skip
+    return files, delta, full, skip
 
 
-def _union_with_part_ids(spark: SparkSession, delta: dict[int, list[str]]):
-    """Union every partition's added files with its literal part_id
-    (directory-derived columns are absent when reading file paths)."""
-    frames = []
-    for pid, paths in delta.items():
-        frames.append(
-            spark.read.parquet(*paths).withColumn(
-                "part_id", F.lit(pid).cast("int")
-            )
-        )
-    u = frames[0]
+def _fingerprint(obj) -> str:
+    return hashlib.sha256(
+        json.dumps(obj, default=str, sort_keys=True).encode()
+    ).hexdigest()
+
+
+def _summarize(
+    spark: SparkSession,
+    table: PartitionedTable,
+    paths: dict[int, list[str]],
+    full: list[int],
+    profiles,
+    allowed,
+    vocab: tuple[int, int],
+    p: dict,
+) -> dict[int, dict]:
+    """Fresh summaries of exactly ``paths`` (part -> files: every file of a
+    full partition, the added files of a delta one), from one frame."""
+    frames = [table.read_partitions(spark, full)] if full else []
+    frames += [
+        # directory-derived columns are absent when reading file paths
+        spark.read.parquet(*ps).withColumn("part_id", F.lit(pid).cast("int"))
+        for pid, ps in paths.items()
+        if pid not in full
+    ]
+    frame = frames[0]
     for fr in frames[1:]:
-        u = u.unionByName(fr)
-    return u
-
-
-class IncrementalStatsValidator:
-    """Incremental column-stats validation with file-level lineage.
-
-    ``run(spark)`` returns {part_id: {"mode", "passed", "metric", "stats"}}
-    and persists the merged state; ``scanned_rows`` on the result object
-    reports exactly how many rows the run read (the delta-mode guarantee).
-    """
-
-    def __init__(
-        self,
-        table: PartitionedTable,
-        store_path: str,
-        n_salt: int = 16,
-        bucket_width: int = 64,
-        max_bad: float = 0.0,
-    ):
-        self.table = table
-        self.store_path = store_path
-        self.n_salt = n_salt
-        self.bucket_width = bucket_width
-        self.max_bad = max_bad
-        self.entries: dict[str, dict] = {}
-        if os.path.exists(store_path):
-            with open(store_path) as f:
-                self.entries = json.load(f)
-
-    def _save(self) -> None:
-        os.makedirs(os.path.dirname(self.store_path) or ".", exist_ok=True)
-        fd, tmp = tempfile.mkstemp(dir=os.path.dirname(self.store_path) or ".")
-        with os.fdopen(fd, "w") as f:
-            json.dump(self.entries, f, indent=1, sort_keys=True)
-        os.replace(tmp, self.store_path)
-
-    def _classify(self) -> tuple[dict[int, list[str]], list[int], list[int]]:
-        return classify_partitions(self.table, self.entries)
-
-    def _stats_for(self, df) -> dict[int, dict]:
-        rows = partition_stats(df, self.n_salt, self.bucket_width).collect()
-        return {int(r["part_id"]): _row_to_stats(r) for r in rows}
-
-    def run(self, spark: SparkSession, _precomputed: dict | None = None) -> dict:
-        # _precomputed: {"full": {pid: stats}, "delta": {pid: stats}} from the
-        # fused single-decode token pass (run_incremental_suite) — same dict
-        # shape _stats_for returns, so the merge/verdict logic is identical.
-        delta, full, skip = self._classify()
-        results: dict[int, dict] = {}
-        scanned_rows = 0
-
-        if full:
-            stats = (
-                _precomputed["full"]
-                if _precomputed is not None
-                else self._stats_for(self.table.read_partitions(spark, full))
-            )
-            for pid in full:
-                s = stats.get(pid) or _empty_stats()
-                scanned_rows += s["row_count"]
-                results[pid] = {"mode": "full", "stats": s}
-
-        if delta:
-            # ONE job over every partition's added files
-            dstats = (
-                _precomputed["delta"]
-                if _precomputed is not None
-                else self._stats_for(_union_with_part_ids(spark, delta))
-            )
-            for pid in delta:
-                d = dstats.get(pid) or _empty_stats()
-                scanned_rows += d["row_count"]
-                merged = merge_stats(self.entries[str(pid)]["stats"], d)
-                results[pid] = {"mode": "delta", "stats": merged}
-
-        for pid in skip:
-            results[pid] = {
-                "mode": "skip",
-                "stats": self.entries[str(pid)]["stats"],
-            }
-
-        for pid, res in results.items():
-            s = res["stats"]
-            bad = sum(s[k] for k in _BAD_FIELDS)
-            res["metric"] = float(bad)
-            res["passed"] = bad <= self.max_bad
-            if res["mode"] != "skip":
-                self.entries[str(pid)] = {
-                    "files": _part_files(self.table, pid),
-                    "stats": s,
-                }
-        self._save()
-        return {
-            "parts": results,
-            "scanned_rows": scanned_rows,
-            "modes": {
-                pid: res["mode"] for pid, res in sorted(results.items())
-            },
-        }
-
-
-def _empty_stats() -> dict:
-    d = {k: 0 for k in _SUM_FIELDS}
-    d["min_n_tok"] = None
-    d["max_n_tok"] = None
-    d["n_tok_hist"] = {}
-    return d
-
-
-class IncrementalDriftValidator:
-    """Incremental DRIFT validation: the drift rule's entire signal is the
-    tagged token partials of plans/shared.py — per (source, kind, key) count
-    rows that merge by addition — so appended files contribute partials that
-    merge exactly with the stored ones, and the KS/L1 scoring re-derives
-    from the merged table (same helpers, same thresholds as the batch rule).
-
-    Per-partition state is the partials list (bounded by sources x
-    (|reference tokens| + |distinct n_tok|), independent of row count) plus
-    the file lineage. Hashed-domain profiles (the pathological-vocabulary
-    fallback) are refused here — their bucket folding is a lossy transform
-    best kept on the one-shot batch path.
-    """
-
-    def __init__(self, table: PartitionedTable, store_path: str, params: dict | None = None):
-        from ..operators.drift import DEFAULTS
-
-        self.table = table
-        self.store_path = store_path
-        self.params = {**DEFAULTS, **(params or {})}
-        self.entries: dict[str, dict] = {}
-        if os.path.exists(store_path):
-            with open(store_path) as f:
-                self.entries = json.load(f)
-
-    def _save(self) -> None:
-        os.makedirs(os.path.dirname(self.store_path) or ".", exist_ok=True)
-        fd, tmp = tempfile.mkstemp(dir=os.path.dirname(self.store_path) or ".")
-        with os.fdopen(fd, "w") as f:
-            json.dump(self.entries, f, sort_keys=True)
-        os.replace(tmp, self.store_path)
-
-    def _partials_for(self, spark, df, profiles) -> dict[int, list]:
-        from ..plans.shared import KIND_NTOK, KIND_TOKEN, SharedTokenStats
-
+        frame = frame.unionByName(fr)
+    # local parquet layout -> the shared pass decodes the files in the
+    # Python worker (plans/shared.py::_build_partials_direct), as the runner
+    # does; the corrupt-tolerant read keeps the Spark scan
+    direct = None
+    if not table.tolerate_corrupt:
+        direct = [(pid, f) for pid, ps in sorted(paths.items()) for f in ps] or None
+    if profiles is not None:
         shared = SharedTokenStats.from_profiles(
-            df,
+            frame,
             profiles,
-            max_ref_tokens=int(self.params["max_ref_tokens"]),
-            hash_buckets=int(self.params["hash_buckets"]),
+            max_ref_tokens=int(p["drift"]["max_ref_tokens"]),
+            hash_buckets=int(p["drift"]["hash_buckets"]),
+            vocab_lo=vocab[0],
+            vocab_hi=vocab[1],
+            direct_files=direct,
         )
         if shared.hash_mod:
             raise ValueError(
                 "hashed-domain profiles are not supported incrementally; "
                 "run the batch drift rule"
             )
-        rows = (
-            shared.partials.filter(F.col("kind").isin(KIND_NTOK, KIND_TOKEN))
-            .collect()
+    else:
+        # no drift: a one-token reference domain; only kinds 2-4 are read
+        shared = SharedTokenStats(
+            frame, 0, 0, True, vocab_lo=vocab[0], vocab_hi=vocab[1],
+            direct_files=direct,
         )
-        out: dict[int, list] = {}
-        for r in rows:
-            out.setdefault(int(r["part_id"]), []).append(
-                [r["source"], int(r["kind"]), int(r["key"]), int(r["cnt"])]
-            )
-        return out
 
-    @staticmethod
-    def _merge_partials(a: list, b: list) -> list:
-        acc: dict[tuple, int] = {}
-        for src, kind, key, cnt in list(a) + list(b):
-            k = (src, int(kind), int(key))
-            acc[k] = acc.get(k, 0) + int(cnt)
-        return [
-            [src, kind, key, cnt]
-            for (src, kind, key), cnt in sorted(acc.items())
-        ]
-
-    def _score(self, partials: list, quantiles, token_freq, ref_tokens) -> float:
-        """max over (source) groups of max(ks/ks_thr, l1/l1_thr) — the same
-        math as the batch rule's score_fn, driver-side over the tiny merged
-        partials (deterministic: partials are sorted before scoring)."""
-        import numpy as np
-
-        from ..operators.drift import _ks_from_hist, _ks_from_tdigest
-
-        ks_fn = (
-            _ks_from_tdigest
-            if self.params["method"] == "tdigest"
-            else _ks_from_hist
-        )
-        by_src: dict[str, dict[int, list]] = {}
-        for src, kind, key, cnt in sorted(partials):
-            by_src.setdefault(src, {0: [], 1: []})[kind].append((key, cnt))
-        best = 0.0
-        for src, kinds in by_src.items():
-            h = np.array(kinds[0], dtype=np.float64).reshape(-1, 2)
-            n_docs = float(h[:, 1].sum()) if len(h) else 0.0
-            if n_docs < float(self.params["min_docs"]):
-                continue
-            q = quantiles.get(src)
-            ks = ks_fn(h[:, 0], h[:, 1], q) if q is not None and len(h) else 0.0
-            total = float((h[:, 0] * h[:, 1]).sum()) if len(h) else 0.0
-            obs = np.zeros(len(ref_tokens))
-            idx = {t: i for i, t in enumerate(ref_tokens)}
-            for key, cnt in kinds[1]:
-                i = idx.get(int(key))
-                if i is not None:
-                    obs[i] = float(cnt)
-            obs = obs / total if total > 0 else obs
-            ref = token_freq.get(src, {})
-            refv = np.array([ref.get(tk, 0.0) for tk in ref_tokens])
-            l1 = float(np.abs(obs - refv).sum())
-            score = max(
-                ks / float(self.params["ks_threshold"]),
-                l1 / float(self.params["l1_threshold"]),
-            )
-            best = max(best, score)
-        return best
-
-    def run(
-        self, spark: SparkSession, profiles, _precomputed: dict | None = None
-    ) -> dict:
-        # _precomputed: {"full": {pid: partials}, "delta": {pid: partials}}
-        # from the fused single-decode token pass (run_incremental_suite) —
-        # the same [source, kind, key, cnt] lists _partials_for returns.
-        import numpy as np
-
-        delta, full, skip = classify_partitions(self.table, self.entries)
-        partials_by_part: dict[int, list] = {}
-
-        if full:
-            got = (
-                _precomputed["full"]
-                if _precomputed is not None
-                else self._partials_for(
-                    spark, self.table.read_partitions(spark, full), profiles
-                )
-            )
-            for pid in full:
-                partials_by_part[pid] = sorted(got.get(pid, []))
-        if delta:
-            got = (
-                _precomputed["delta"]
-                if _precomputed is not None
-                else self._partials_for(
-                    spark, _union_with_part_ids(spark, delta), profiles
-                )
-            )
-            for pid in delta:
-                partials_by_part[pid] = self._merge_partials(
-                    self.entries[str(pid)]["partials"], got.get(pid, [])
-                )
-
-        prof_rows = profiles.collect()
-        quantiles = {
-            r["source"]: np.asarray(r["n_tok_quantiles"], dtype=np.float64)
-            for r in prof_rows
-        }
-        token_freq = {r["source"]: dict(r["token_freq"]) for r in prof_rows}
-        ref_tokens = sorted({t for m in token_freq.values() for t in m})
-
-        # Score memo: the metric is a pure function of (partials, profiles,
-        # params). Re-deriving it for every SKIP partition on every run is
-        # O(n_parts x sources x hist-domain) of driver-side python — at 10^6
-        # partitions that dwarfs the actual delta work. Skip partitions
-        # whose stored fingerprint matches reuse the stored metric; a
-        # profile or threshold change invalidates the fingerprint and
-        # rescored metrics (no scan — the partials are state).
-        import hashlib
-
-        fp = hashlib.sha256(
-            json.dumps(
-                [
-                    sorted(
-                        (
-                            r["source"],
-                            [float(q) for q in r["n_tok_quantiles"]],
-                            sorted(
-                                (int(k), float(v))
-                                for k, v in r["token_freq"].items()
-                            ),
-                        )
-                        for r in prof_rows
-                    ),
-                    {k: self.params[k] for k in sorted(self.params)},
-                ],
-                default=str,
-            ).encode()
-        ).hexdigest()
-
-        results: dict[int, dict] = {}
-        for pid in skip:
-            e = self.entries[str(pid)]
-            if e.get("score_fp") == fp and "metric" in e:
-                results[pid] = {
-                    "mode": "skip",
-                    "metric": float(e["metric"]),
-                    "passed": float(e["metric"]) <= 1.0,
-                }
-            else:
-                partials_by_part[pid] = e["partials"]
-        for pid, partials in partials_by_part.items():
-            metric = self._score(partials, quantiles, token_freq, ref_tokens)
-            mode = (
-                "skip" if pid in skip else "delta" if pid in delta else "full"
-            )
-            results[pid] = {
-                "mode": mode,
-                "metric": metric,
-                "passed": metric <= 1.0,
-            }
-            if mode != "skip":
-                self.entries[str(pid)] = {
-                    "files": _part_files(self.table, pid),
-                    "partials": partials,
-                }
-            self.entries[str(pid)]["metric"] = metric
-            self.entries[str(pid)]["score_fp"] = fp
-        # the store carries every partition's partials (~MBs at real
-        # partition counts); rewriting it when nothing was rescored is pure
-        # serialization cost on the all-skip path
-        if partials_by_part:
-            self._save()
-        return {
-            "parts": results,
-            "modes": {pid: r["mode"] for pid, r in sorted(results.items())},
-        }
-
-
-class IncrementalReferentialValidator:
-    """Incremental REFERENTIAL validation: the rule is per-row independent
-    (a row either has an allowed source or not), so delta files contribute
-    delta violation counts that ADD to the stored metric — nothing else is
-    state. passed = metric == 0, matching the batch rule."""
-
-    def __init__(self, table: PartitionedTable, store_path: str):
-        self.table = table
-        self.store_path = store_path
-        self.entries: dict[str, dict] = {}
-        if os.path.exists(store_path):
-            with open(store_path) as f:
-                self.entries = json.load(f)
-
-    def _save(self) -> None:
-        os.makedirs(os.path.dirname(self.store_path) or ".", exist_ok=True)
-        fd, tmp = tempfile.mkstemp(dir=os.path.dirname(self.store_path) or ".")
-        with os.fdopen(fd, "w") as f:
-            json.dump(self.entries, f, indent=1, sort_keys=True)
-        os.replace(tmp, self.store_path)
-
-    @staticmethod
-    def _counts(df, allowed) -> dict[int, int]:
-        active = allowed.filter(F.col("active")).select("source")
-        rows = (
-            df.select("part_id", "source")
-            .join(F.broadcast(active), "source", "left_anti")
-            .groupBy("part_id")
-            .agg(F.count(F.lit(1)).alias("n"))
-            .collect()
-        )
-        return {int(r["part_id"]): int(r["n"]) for r in rows}
-
-    def run(
-        self,
-        spark: SparkSession,
-        allowed,
-        _precomputed: dict | None = None,
-    ) -> dict:
-        # _precomputed: {"full": {pid: n}, "delta": {pid: n}} — violation
-        # counts from the fused token pass (token_bounds only; referential's
-        # own scan is tokens-free and cheap).
-        delta, full, skip = classify_partitions(self.table, self.entries)
-        results: dict[int, dict] = {}
-        if full:
-            got = (
-                _precomputed["full"]
-                if _precomputed is not None
-                else self._counts(
-                    self.table.read_partitions(spark, full), allowed
-                )
-            )
-            for pid in full:
-                results[pid] = {"mode": "full", "metric": float(got.get(pid, 0))}
-        if delta:
-            got = (
-                _precomputed["delta"]
-                if _precomputed is not None
-                else self._counts(_union_with_part_ids(spark, delta), allowed)
-            )
-            for pid in delta:
-                results[pid] = {
-                    "mode": "delta",
-                    "metric": float(self.entries[str(pid)]["metric"])
-                    + float(got.get(pid, 0)),
-                }
-        for pid in skip:
-            results[pid] = {
-                "mode": "skip",
-                "metric": float(self.entries[str(pid)]["metric"]),
-            }
-        for pid, res in results.items():
-            res["passed"] = res["metric"] == 0.0
-            if res["mode"] != "skip":
-                self.entries[str(pid)] = {
-                    "files": _part_files(self.table, pid),
-                    "metric": res["metric"],
-                }
-        self._save()
-        return {
-            "parts": results,
-            "modes": {pid: r["mode"] for pid, r in sorted(results.items())},
-        }
-
-
-class IncrementalTokenBoundsValidator(IncrementalReferentialValidator):
-    """Incremental TOKEN_BOUNDS validation: like referential, the rule is
-    per-row independent (a row either contains an out-of-vocab token or
-    not), so delta files contribute delta violation counts that ADD to the
-    stored metric. Inherits the file-lineage store / classify / merge loop
-    from the referential validator; only the counting plan differs — and the
-    ``allowed`` argument is repurposed as (vocab_lo, vocab_size)."""
-
-    def __init__(
-        self, table: PartitionedTable, store_path: str,
-        vocab_lo: int = 0, vocab_size: int = 32768,
-    ):
-        super().__init__(table, store_path)
-        self.vocab_lo = int(vocab_lo)
-        self.vocab_size = int(vocab_size)
-
-    def _counts(self, df, allowed=None) -> dict[int, int]:
-        from ..operators.token_bounds import has_oov
-
-        rows = (
-            df.select(
-                "part_id",
-                F.when(has_oov(self.vocab_lo, self.vocab_size), 1)
-                .otherwise(0)
-                .alias("b"),
-            )
-            .groupBy("part_id")
-            .agg(F.sum("b").alias("n"))
-            .filter(F.col("n") > 0)
-            .collect()
-        )
-        return {int(r["part_id"]): int(r["n"]) for r in rows}
-
-    def run(
-        self,
-        spark: SparkSession,
-        allowed=None,
-        _precomputed: dict | None = None,
-    ) -> dict:
-        return super().run(spark, allowed, _precomputed=_precomputed)
-
-
-class IncrementalUniquenessValidator:
-    """Incremental UNIQUENESS validation: the HLL screen's sketch is
-    mergeable by design (Datasketches HLL via F.hll_sketch_agg /
-    hll_union_agg), so appended files contribute a delta sketch that unions
-    with the stored one, and the exact row count adds. A partition whose
-    MERGED screen flags possible duplicates (estimate < rows * (1 - 3*rsd),
-    the batch rule's band) falls back to the exact hash-group pass over the
-    WHOLE partition — duplicates can straddle old and new files, so no
-    delta-only exact check is sound; the screen's job is making that full
-    pass rare. A still-flagged partition re-runs its exact pass on EVERY
-    run, including skip runs — the same contract as the manifest's
-    failure-replay semantics (validated partitions skip, failures replay).
-    lgConfigK=14 gives the sketch ~0.8% relative error, inside the rsd=0.01
-    band.
-
-    scope="global" (cross-partition duplicates) is where the stored sketches
-    pay twice: the global screen — sum(per-partition estimates) minus the
-    estimate of the UNION of every stored sketch — needs NO scan at all on a
-    skip/delta run, because the old partitions' sketches come from the store.
-    An append to one partition that duplicates ids already living in another
-    (untouched, mode=skip) partition flips the cross signal and triggers the
-    exact global hash-group pass over the whole table — the one case where a
-    skip partition's verdict can change without its files changing, which is
-    precisely the point of the global scope.
-    """
-
-    def __init__(
-        self, table: PartitionedTable, store_path: str, rsd: float = 0.01,
-        lg_config_k: int = 14, scope: str = "partition",
-    ):
-        self.table = table
-        self.store_path = store_path
-        self.rsd = rsd
-        self.lg_k = lg_config_k
-        self.scope = scope
-        self.entries: dict[str, dict] = {}
-        if os.path.exists(store_path):
-            with open(store_path) as f:
-                self.entries = json.load(f)
-
-    def _save(self) -> None:
-        os.makedirs(os.path.dirname(self.store_path) or ".", exist_ok=True)
-        fd, tmp = tempfile.mkstemp(dir=os.path.dirname(self.store_path) or ".")
-        with os.fdopen(fd, "w") as f:
-            json.dump(self.entries, f, indent=1, sort_keys=True)
-        os.replace(tmp, self.store_path)
-
-    def _sketches(self, df) -> dict[int, tuple[int, bytes]]:
-        rows = (
-            df.groupBy("part_id")
-            .agg(
-                F.count(F.lit(1)).alias("n"),
-                F.hll_sketch_agg("doc_id", F.lit(self.lg_k)).alias("sk"),
-            )
-            .collect()
-        )
-        return {int(r["part_id"]): (int(r["n"]), bytes(r["sk"])) for r in rows}
-
-    def _union_sketches(self, spark, pairs: dict[int, list[bytes]]) -> dict[int, tuple[bytes, int]]:
-        """Union each partition's sketch list and estimate, one tiny job."""
-        data = [(pid, sk) for pid, sks in pairs.items() for sk in sks]
-        rows = (
-            spark.createDataFrame(data, "part_id int, sk binary")
-            .groupBy("part_id")
-            .agg(F.hll_union_agg("sk").alias("u"))
-            .select(
-                "part_id", "u", F.hll_sketch_estimate("u").alias("est")
-            )
-            .collect()
-        )
-        return {int(r["part_id"]): (bytes(r["u"]), int(r["est"])) for r in rows}
-
-    def run(self, spark: SparkSession) -> dict:
-        import base64
-
-        from ..operators.uniqueness import duplicate_doc_ids
-
-        delta, full, skip = classify_partitions(self.table, self.entries)
-        state: dict[int, tuple[int, bytes]] = {}  # pid -> (n_rows, sketch)
-        results: dict[int, dict] = {}
-
-        if full:
-            got = self._sketches(self.table.read_partitions(spark, full))
-            for pid in full:
-                state[pid] = got.get(pid, (0, b""))
-                results[pid] = {"mode": "full"}
-        if delta:
-            got = self._sketches(_union_with_part_ids(spark, delta))
-            to_union: dict[int, list[bytes]] = {}
-            d_rows: dict[int, int] = {}
-            for pid in delta:
-                n_new, sk_new = got.get(pid, (0, b""))
-                old = self.entries[str(pid)]
-                d_rows[pid] = int(old["n_rows"]) + n_new
-                sks = [base64.b64decode(old["sketch_b64"])]
-                if sk_new:
-                    sks.append(sk_new)
-                to_union[pid] = sks
-            unioned = self._union_sketches(spark, to_union)
-            for pid in delta:
-                state[pid] = (d_rows[pid], unioned[pid][0])
-                results[pid] = {"mode": "delta"}
-        for pid in skip:
-            old = self.entries[str(pid)]
-            state[pid] = (
-                int(old["n_rows"]), base64.b64decode(old["sketch_b64"])
-            )
-            results[pid] = {"mode": "skip"}
-
-        # ALL-skip fast path: with every file set unchanged, every verdict —
-        # screen flags included, and in global scope the cross signal too —
-        # is a pure function of the unchanged store, so the stored results
-        # are returned without submitting a single job or rewriting the
-        # store. (A delta/full partition falls through: in global scope one
-        # changed partition can legitimately flip a skip partition's
-        # verdict, so the screen re-runs over the full merged state below.)
-        if not full and not delta and all(
-            "metric" in self.entries[str(pid)]
-            and "detail" in self.entries[str(pid)]
-            # a memo recorded under the other scope is not reusable
-            and (
-                ("scope=global" in self.entries[str(pid)]["detail"])
-                == (self.scope == "global")
-            )
-            for pid in skip
-        ):
-            for pid in skip:
-                e = self.entries[str(pid)]
-                results[pid]["metric"] = float(e["metric"])
-                results[pid]["passed"] = float(e["metric"]) == 0.0
-                results[pid]["detail"] = e["detail"]
-            return {
-                "parts": results,
-                "modes": {
-                    pid: r["mode"] for pid, r in sorted(results.items())
-                },
-            }
-
-        # screen over merged state (estimates in one tiny job)
-        ests = self._union_sketches(
-            spark, {pid: [sk] for pid, (_, sk) in state.items() if sk}
-        )
-        flagged = [
-            pid
-            for pid, (n, sk) in state.items()
-            if sk and n > 0 and ests[pid][1] < n * (1.0 - 3.0 * self.rsd)
-        ]
-        if self.scope == "global":
-            from ..operators.uniqueness import global_duplicate_doc_ids
-
-            # cross screen: union EVERY stored sketch (no scan — one tiny
-            # driver-submitted job over n_parts serialized sketches)
-            total = sum(n for n, _ in state.values())
-            sum_est = sum(ests[pid][1] for pid in ests)
-            all_sks = [sk for _, sk in state.values() if sk]
-            union_est = 0
-            if all_sks:
-                union_est = self._union_sketches(spark, {-1: all_sks})[-1][1]
-            cross = (sum_est - union_est) > 3.0 * self.rsd * total
-            exact_pids = sorted(state) if cross else flagged
-            dup_counts = {}
-            if exact_pids:
-                dups = global_duplicate_doc_ids(
-                    self.table.read_partitions(spark, exact_pids)
-                )
-                for r in (
-                    dups.groupBy("part_id")
-                    .agg(F.count(F.lit(1)).alias("n"))
-                    .collect()
-                ):
-                    dup_counts[int(r["part_id"])] = int(r["n"])
-            for pid, res in results.items():
-                exact = pid in exact_pids
-                metric = float(dup_counts.get(pid, 0)) if exact else 0.0
-                res["metric"] = metric
-                res["passed"] = metric == 0.0
-                res["detail"] = (
-                    "path=exact scope=global"
-                    if exact
-                    else "path=screen scope=global"
-                )
-                if res["mode"] != "skip":
-                    n, sk = state[pid]
-                    self.entries[str(pid)] = {
-                        "files": _part_files(self.table, pid),
-                        "n_rows": n,
-                        "sketch_b64": base64.b64encode(sk).decode(),
-                    }
-                # memo for the all-skip fast path (valid because the global
-                # verdicts are a function of the full unchanged store)
-                self.entries[str(pid)]["metric"] = metric
-                self.entries[str(pid)]["detail"] = res["detail"]
-            self._save()
-            return {
-                "parts": results,
-                "modes": {
-                    pid: r["mode"] for pid, r in sorted(results.items())
-                },
-            }
-
-        # Partition-scope exact results are pure functions of the partition's
-        # file set: a SKIP partition's stored exact dup count cannot have
-        # changed, so it is reused instead of re-scanning — at 10^12 rows,
-        # replaying the exact pass over every flagged-but-unchanged partition
-        # on every run is the difference between an O(delta) rerun and an
-        # O(all flagged data) one. (Global scope cannot memoize per
-        # partition: its exact counts depend on the SET of partitions
-        # scanned together.) Changing rsd between runs can alter which
-        # partitions the screen flags; delete the store to re-derive.
-        memo = {
-            pid: float(self.entries[str(pid)]["metric"])
-            for pid in flagged
-            if results[pid]["mode"] == "skip"
-            and "metric" in self.entries[str(pid)]
-        }
-        need_exact = [pid for pid in flagged if pid not in memo]
-        dup_counts: dict[int, int] = {}
-        if need_exact:
-            dups = duplicate_doc_ids(
-                self.table.read_partitions(spark, need_exact)
-            )
-            for r in (
-                dups.groupBy("part_id").agg(F.count(F.lit(1)).alias("n")).collect()
-            ):
-                dup_counts[int(r["part_id"])] = int(r["n"])
-
-        for pid, res in results.items():
-            exact = pid in flagged
-            if exact:
-                metric = memo.get(pid, float(dup_counts.get(pid, 0)))
-            else:
-                metric = 0.0
-            res["metric"] = metric
-            res["passed"] = metric == 0.0
-            res["detail"] = "path=exact" if exact else "path=screen"
-            if res["mode"] != "skip":
-                n, sk = state[pid]
-                self.entries[str(pid)] = {
-                    "files": _part_files(self.table, pid),
-                    "n_rows": n,
-                    "sketch_b64": base64.b64encode(sk).decode(),
-                }
-            # the memo: exact counts (and screen zeros) ride the store
-            self.entries[str(pid)]["metric"] = metric
-            self.entries[str(pid)]["detail"] = res["detail"]
-        self._save()
-        return {
-            "parts": results,
-            "modes": {pid: r["mode"] for pid, r in sorted(results.items())},
-        }
-
-
-def _narrow_row_to_stats(row, null_tokens: int, len_mismatch: int) -> dict:
-    """Assemble the stats dict from the tokens-free salted pass plus the two
-    token-derived counters that came from the shared Arrow scan."""
-    d = {
-        k: int(row[k])
-        for k in _SUM_FIELDS
-        if k not in ("null_tokens", "len_mismatch")
+    out = {
+        pid: {**empty_summary(profiles is not None, allowed is not None), "sketch": b""}
+        for pid in paths
     }
-    d["null_tokens"] = int(null_tokens)
-    d["len_mismatch"] = int(len_mismatch)
-    d["min_n_tok"] = None if row["min_n_tok"] is None else int(row["min_n_tok"])
-    d["max_n_tok"] = None if row["max_n_tok"] is None else int(row["max_n_tok"])
-    d["n_tok_hist"] = {
-        str(k): int(v) for k, v in (row["n_tok_hist"] or {}).items()
-    }
-    return d
+    shared.persist()
+    try:
+        for r in shared.partials.collect():  # the one decode of `tokens`
+            e, kind = out[int(r["part_id"])], int(r["kind"])
+            if kind in (KIND_NTOK, KIND_TOKEN) and "partials" in e:
+                e["partials"].append(
+                    [r["source"], kind, int(r["key"]), int(r["cnt"])]
+                )
+            elif kind == KIND_OOV_ROWS:
+                e["token_bounds"] += int(r["cnt"])
+        # null-tokens / len-mismatch come from the cached partials
+        cs = p["column_stats"]
+        for r in column_stats.partition_stats(
+            frame, cs["n_salt"], cs["bucket_width"], shared=shared
+        ).collect():
+            out[int(r["part_id"])]["stats"] = _row_to_stats(r)
+    finally:
+        shared.unpersist()
+
+    narrow = frame
+    lg_k = int(p["uniqueness"]["lg_k"])
+    aggs = [F.hll_sketch_agg("doc_id", F.lit(lg_k)).alias("sk")]
+    if allowed is not None:
+        # the referential rule's anti join, as a count: a row whose source
+        # matches no active allowed source (NULL never matches) violates
+        active = (
+            allowed.filter(F.col("active")).select("source").distinct()
+            .withColumn("_known", F.lit(True))
+        )
+        narrow = frame.join(F.broadcast(active), "source", "left")
+        aggs.append(F.count_if(F.col("_known").isNull()).alias("unknown"))
+    for r in narrow.groupBy("part_id").agg(*aggs).collect():
+        e = out[int(r["part_id"])]
+        e["sketch"] = bytes(r["sk"])
+        if allowed is not None:
+            e["referential"] = int(r["unknown"])
+    return out
+
+
+def _union_sketches(
+    spark, data: list[tuple[int, bytes]]
+) -> dict[int, tuple[bytes, float]]:
+    """Union each group's sketches and estimate — one tiny job, no scan."""
+    rows = (
+        spark.createDataFrame(data, "part_id int, sk binary")
+        .groupBy("part_id")
+        .agg(F.hll_union_agg("sk").alias("u"))
+        .select("part_id", "u", F.hll_sketch_estimate("u").alias("est"))
+        .collect()
+    )
+    return {int(r["part_id"]): (bytes(r["u"]), float(r["est"])) for r in rows}
+
+
+def _drift_metric(score, partials: list) -> float:
+    """Max group score over one partition's partials (0 when no group has
+    enough rows) — the batch rule's per-partition metric."""
+    groups: dict[str, tuple[list, list, list, list]] = {}
+    for src, kind, key, cnt in partials:
+        g = groups.setdefault(src, ([], [], [], []))
+        off = 0 if kind == KIND_NTOK else 2
+        g[off].append(key)
+        g[off + 1].append(cnt)
+    best = 0.0
+    for src, g in groups.items():
+        s = score(src, *g)
+        if s is not None:
+            best = max(best, s[3])
+    return best
 
 
 def run_incremental_suite(
@@ -893,130 +325,205 @@ def run_incremental_suite(
     manifest_dir: str,
     profiles=None,
     allowed=None,
-    vocab_lo: int = 0,
-    vocab_size: int = 32768,
+    vocab_lo: int | None = None,
+    vocab_size: int | None = None,
+    params: dict | None = None,
 ) -> dict[str, dict]:
-    """The incremental suite with ONE `tokens` decode per scanned file set.
+    """Validate the five data rules incrementally against the one store in
+    ``manifest_dir``. ``params`` is the runner's rule-parameter dict (keyed
+    by rule id; vocab bounds at top level, as for the batch token_bounds
+    rule); explicit ``vocab_lo``/``vocab_size`` override it.
 
-    Run separately, three of the five incremental validators each pay their
-    own scan of the `tokens` column (~99% of the table's bytes): column_stats
-    (size/null checks), drift (token-frequency partials) and token_bounds
-    (OOV rows) — on first sight that is 3x the dominant I/O, exactly the
-    duplication the batch suite already eliminates via plans/shared.py. This
-    orchestrator classifies once, runs ONE SharedTokenStats pass per scanned
-    frame (kinds 0-4: n_tok histogram, token freq, len-mismatch, null-tokens,
-    OOV rows) plus the cheap tokens-free salted pass, and feeds all three
-    validators their per-partition inputs; referential (source-only scan) and
-    uniqueness (doc_id sketches) keep their own narrow jobs.
+    Returns {"column_stats", "drift", "referential", "uniqueness",
+    "token_bounds"} -> {"parts": {part_id: {"mode", "passed", "metric",
+    ...}}, "modes": {part_id: mode}}; column_stats also carries each
+    partition's merged "stats" and the run's "scanned_rows", uniqueness each
+    partition's "detail". Drift / referential are absent when their
+    dimension input is None."""
+    params = params or {}
+    p = {
+        rule.RULE_ID: {**rule.DEFAULTS, **params.get(rule.RULE_ID, {})}
+        for rule in (column_stats, drift, uniqueness)
+    }
+    tb = {**token_bounds.DEFAULTS, **params}
+    lo = int(tb["vocab_lo"] if vocab_lo is None else vocab_lo)
+    hi = int(tb["vocab_size"] if vocab_size is None else vocab_size)
+    prof_rows = profiles.collect() if profiles is not None else None
+    layout = {
+        "vocab": [lo, hi],
+        "bucket_width": int(p["column_stats"]["bucket_width"]),
+        "lg_k": int(p["uniqueness"]["lg_k"]),
+        "referential": allowed is not None,
+        "drift_domain": None if prof_rows is None else _fingerprint(
+            sorted({int(t) for r in prof_rows for t in r["token_freq"]})
+        ),
+    }
 
-    Correctness: the fused inputs are the identical quantities each
-    validator's own scan derives — the batch suite's shared-vs-direct
-    equivalence is already part of the rule contracts (column_stats consumes
-    kinds 2/3 and token_bounds kind 4 in batch mode) — and the fusion only
-    engages when all three validators agree on every partition's mode (their
-    stores are written together by this CLI path, so they do unless a store
-    was hand-edited or lost); on ANY disagreement each validator falls back
-    to its own scan, correctness over cleverness. Drift's hashed-domain
-    fallback cannot run incrementally (stored partials would mix domains), so
-    that case also falls back per-validator (the drift validator raises, as
-    it does today).
+    path = os.path.join(manifest_dir, STORE_NAME)
+    store: dict = {}
+    if os.path.exists(path):
+        with open(path) as f:
+            store = json.load(f)
+    entries = store.get("parts", {}) if store.get("layout") == layout else {}
 
-    Returns {"column_stats": ..., "drift": ..., "referential": ...,
-    "uniqueness": ..., "token_bounds": ...} — each the validator's run()
-    dict; drift/referential keys absent when their dimension input is None.
-    """
-    sv = IncrementalStatsValidator(
-        table, os.path.join(manifest_dir, "incremental_stats.json")
+    files, delta, full, skip = classify_partitions(table, entries)
+    paths = {
+        pid: [
+            os.path.join(table.path, f"part_id={pid}", f) for f in sorted(files[pid])
+        ]
+        for pid in full
+    }
+    paths.update(delta)
+    fresh = (
+        _summarize(spark, table, paths, full, profiles, allowed, (lo, hi), p)
+        if paths
+        else {}
     )
-    dv = (
-        IncrementalDriftValidator(
-            table, os.path.join(manifest_dir, "incremental_drift.json")
-        )
-        if profiles is not None
-        else None
-    )
-    tv = IncrementalTokenBoundsValidator(
-        table,
-        os.path.join(manifest_dir, "incremental_token_bounds.json"),
-        vocab_lo,
-        vocab_size,
-    )
 
-    fused = [v for v in (sv, dv, tv) if v is not None]
-    classes = [classify_partitions(table, v.entries) for v in fused]
-    agree = all(c == classes[0] for c in classes[1:])
+    # merged state: stored summary (empty for a full partition) + fresh one
+    state: dict[int, dict] = {pid: entries[str(pid)] for pid in skip}
+    sketches = {
+        pid: [base64.b64decode(e["sketch"])] if e["sketch"] else []
+        for pid, e in state.items()
+    }
+    empty = empty_summary(profiles is not None, allowed is not None)
+    for pid, new in fresh.items():
+        old = entries[str(pid)] if pid in delta else {**empty, "sketch": ""}
+        state[pid] = {
+            **merge_summaries(old, new),
+            "files": files[pid],
+            "sketch": "",
+            "memo": {},
+        }
+        sketches[pid] = [
+            sk for sk in (base64.b64decode(old["sketch"]), new["sketch"]) if sk
+        ]
+    modes = {
+        pid: "skip" if pid in skip else "delta" if pid in delta else "full"
+        for pid in sorted(files)
+    }
+    dirty = bool(fresh)
 
-    pre_stats = pre_drift = pre_oov = None
-    if agree and dv is not None:
-        from .shared import (
-            KIND_LEN_MISMATCH,
-            KIND_NTOK,
-            KIND_NULL_TOKENS,
-            KIND_OOV_ROWS,
-            KIND_TOKEN,
-            SharedTokenStats,
-        )
-        from ..operators.column_stats import partition_stats_no_tokens
-
-        delta, full, _skip = classes[0]
-        pre_stats = {"full": {}, "delta": {}}
-        pre_drift = {"full": {}, "delta": {}}
-        pre_oov = {"full": {}, "delta": {}}
-        for mode, frame in (
-            ("full", table.read_partitions(spark, full) if full else None),
-            ("delta", _union_with_part_ids(spark, delta) if delta else None),
-        ):
-            if frame is None:
-                continue
-            shared = SharedTokenStats.from_profiles(
-                frame, profiles, vocab_lo=vocab_lo,
-                vocab_hi=vocab_lo + vocab_size,
-            )
-            if shared.hash_mod:
-                raise ValueError(
-                    "hashed-domain profiles are not supported incrementally; "
-                    "run the batch drift rule"
-                )
-            # the one decode of `tokens` for this frame
-            rows = shared.partials.collect()
-            tok_checks: dict[int, dict[int, int]] = {}
-            for r in rows:
-                pid, kind = int(r["part_id"]), int(r["kind"])
-                if kind in (KIND_NTOK, KIND_TOKEN):
-                    pre_drift[mode].setdefault(pid, []).append(
-                        [r["source"], kind, int(r["key"]), int(r["cnt"])]
-                    )
-                elif kind == KIND_OOV_ROWS:
-                    pre_oov[mode][pid] = (
-                        pre_oov[mode].get(pid, 0) + int(r["cnt"])
-                    )
-                else:  # len-mismatch / null-tokens -> column_stats
-                    tc = tok_checks.setdefault(pid, {})
-                    tc[kind] = tc.get(kind, 0) + int(r["cnt"])
-            narrow = partition_stats_no_tokens(
-                frame, sv.n_salt, sv.bucket_width
-            ).collect()
-            for r in narrow:
-                pid = int(r["part_id"])
-                tc = tok_checks.get(pid, {})
-                pre_stats[mode][pid] = _narrow_row_to_stats(
-                    r,
-                    tc.get(KIND_NULL_TOKENS, 0),
-                    tc.get(KIND_LEN_MISMATCH, 0),
-                )
+    def judged(rule: str, judge) -> dict:
+        parts = {}
+        for pid, mode in modes.items():
+            passed, metric = judge(state[pid][rule])
+            parts[pid] = {"mode": mode, "passed": passed, "metric": metric}
+        return {"parts": parts, "modes": modes}
 
     out: dict[str, dict] = {}
-    out["column_stats"] = sv.run(spark, _precomputed=pre_stats)
-    if dv is not None:
-        out["drift"] = dv.run(spark, profiles, _precomputed=pre_drift)
-    if allowed is not None:
-        rv = IncrementalReferentialValidator(
-            table, os.path.join(manifest_dir, "incremental_referential.json")
-        )
-        out["referential"] = rv.run(spark, allowed)
-    uv = IncrementalUniquenessValidator(
-        table, os.path.join(manifest_dir, "incremental_uniqueness.json")
+    out["column_stats"] = judged(
+        "stats",
+        lambda s: column_stats.judge(s, p["column_stats"]["max_null_rate"]),
     )
-    out["uniqueness"] = uv.run(spark)
-    out["token_bounds"] = tv.run(spark, _precomputed=pre_oov)
+    for pid, res in out["column_stats"]["parts"].items():
+        res["stats"] = state[pid]["stats"]
+    out["column_stats"]["scanned_rows"] = sum(
+        e["stats"]["row_count"] for e in fresh.values()
+    )
+    out["token_bounds"] = judged("token_bounds", lambda n: (n == 0, float(n)))
+    if allowed is not None:
+        out["referential"] = judged("referential", lambda n: (n == 0, float(n)))
+
+    if prof_rows is not None:
+        # the score memo: the metric is a pure function of (partials,
+        # profiles, params); a profile or threshold change rescores from
+        # the stored partials — no scan
+        drift_fp = _fingerprint([
+            sorted(
+                (
+                    r["source"],
+                    [float(q) for q in r["n_tok_quantiles"]],
+                    sorted((int(k), float(v)) for k, v in r["token_freq"].items()),
+                )
+                for r in prof_rows
+            ),
+            p["drift"],
+        ])
+        score = None
+        parts = {}
+        for pid, mode in modes.items():
+            e = state[pid]
+            memo = e["memo"].get("drift")
+            if mode != "skip" or memo is None or memo["fp"] != drift_fp:
+                if score is None:
+                    score = drift.group_scorer(
+                        *drift.profile_maps(prof_rows), p["drift"]
+                    )
+                memo = e["memo"]["drift"] = {
+                    "fp": drift_fp, "metric": _drift_metric(score, e["partials"])
+                }
+                dirty = True
+            m = memo["metric"]
+            parts[pid] = {"mode": mode, "metric": m, "passed": m <= 1.0}
+        out["drift"] = {"parts": parts, "modes": modes}
+
+    # uniqueness: a partition-scope verdict is a pure function of the
+    # partition's files, so an unchanged partition reuses its memo; in
+    # global scope any change re-judges every partition
+    up = p["uniqueness"]
+    is_global = up["scope"] == "global"
+    uniq_fp = _fingerprint(up)
+    need = [
+        pid
+        for pid, mode in modes.items()
+        if mode != "skip"
+        or state[pid]["memo"].get("uniqueness", {}).get("fp") != uniq_fp
+    ]
+    if is_global and need:
+        need = list(modes)
+    if need:
+        data = [(pid, sk) for pid in need for sk in sketches[pid]]
+        if is_global:
+            data += [(-1, sk) for _, sk in data]
+        ests = _union_sketches(spark, data) if data else {}
+        for pid in fresh:
+            if pid in ests:
+                state[pid]["sketch"] = base64.b64encode(ests[pid][0]).decode()
+        rows = {pid: state[pid]["stats"]["row_count"] for pid in need}
+        exact = {
+            pid for pid in need
+            if pid in ests and rows[pid] > 0
+            and uniqueness.screen_flag(rows[pid], ests[pid][1], up["rsd"])
+        }
+        find = uniqueness.duplicate_doc_ids
+        if is_global:
+            find = uniqueness.global_duplicate_doc_ids
+            sum_est = sum(est for pid, (_, est) in ests.items() if pid != -1)
+            union_est = ests.get(-1, (b"", 0.0))[1]
+            total = sum(rows.values())
+            if uniqueness.cross_flag(total, sum_est, union_est, up["rsd"]):
+                exact = set(need)
+        dup_counts: dict[int, int] = {}
+        if exact:
+            dups = find(table.read_partitions(spark, sorted(exact)))
+            for r in (
+                dups.groupBy("part_id").agg(F.count(F.lit(1)).alias("n")).collect()
+            ):
+                dup_counts[int(r["part_id"])] = int(r["n"])
+        scope = " scope=global" if is_global else ""
+        for pid in need:
+            state[pid]["memo"]["uniqueness"] = {
+                "fp": uniq_fp,
+                "metric": float(dup_counts.get(pid, 0)),
+                "detail": ("path=exact" if pid in exact else "path=screen") + scope,
+            }
+        dirty = True
+    parts = {}
+    for pid, mode in modes.items():
+        m = state[pid]["memo"]["uniqueness"]
+        parts[pid] = {
+            "mode": mode,
+            "metric": m["metric"],
+            "passed": m["metric"] == 0.0,
+            "detail": m["detail"],
+        }
+    out["uniqueness"] = {"parts": parts, "modes": modes}
+
+    if dirty:
+        write_json_atomic(
+            path,
+            {"layout": layout, "parts": {str(k): v for k, v in state.items()}},
+            sort_keys=True,
+        )
     return out

@@ -26,6 +26,22 @@ from ..sources.catalog import PartitionedTable
 from .rules import Rule
 
 
+def write_json_atomic(path: str, obj, **dump_kw) -> None:
+    """Replace ``path`` with ``obj`` as JSON atomically: write a temporary
+    file in the same directory, then rename it over ``path``. A failed write
+    leaves the previous file intact and removes the temporary one."""
+    d = os.path.dirname(path) or "."
+    os.makedirs(d, exist_ok=True)
+    fd, tmp = tempfile.mkstemp(dir=d)
+    try:
+        with os.fdopen(fd, "w") as f:
+            json.dump(obj, f, **dump_kw)
+        os.replace(tmp, path)
+    except BaseException:
+        os.unlink(tmp)
+        raise
+
+
 class CheckpointManifest:
     def __init__(self, path: str):
         self.path = path
@@ -36,11 +52,7 @@ class CheckpointManifest:
 
     # -- persistence (atomic: tmp file + rename) ---------------------------
     def save(self) -> None:
-        os.makedirs(os.path.dirname(self.path) or ".", exist_ok=True)
-        fd, tmp = tempfile.mkstemp(dir=os.path.dirname(self.path) or ".")
-        with os.fdopen(fd, "w") as f:
-            json.dump(self.entries, f, indent=1, sort_keys=True)
-        os.replace(tmp, self.path)
+        write_json_atomic(self.path, self.entries, indent=1, sort_keys=True)
 
     # -- resume logic ------------------------------------------------------
     def pending(self, table: PartitionedTable, rules: list[Rule]) -> list[int]:

@@ -55,7 +55,9 @@ VIOLATION_SCHEMA = T.StructType(
 class RuleResult:
     verdicts: DataFrame
     violations: DataFrame
-    stats: DataFrame | None = None  # optional per-partition metrics table
+    # optional cached frame (e.g. a per-partition metrics table); the runner
+    # releases it when the run ends
+    stats: DataFrame | None = None
 
 
 @dataclass

@@ -15,7 +15,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..sources.catalog import PartitionedTable
-from .manifest import CheckpointManifest
+from .manifest import CheckpointManifest, write_json_atomic
 from .rules import (
     Rule,
     RuleContext,
@@ -103,6 +103,47 @@ class ValidationRunner:
             ),
             direct_files=direct_files,
         ).persist()
+        # every frame the run persists (each rule's violations and stats) is
+        # released whether or not a rule raised; a raise skips the manifest
+        persisted: list[DataFrame] = []
+        try:
+            verdict_rows, violations, rows_validated, rule_secs = self._evaluate(
+                df, shared, pending, skipped, persisted
+            )
+        finally:
+            shared.unpersist()
+            for fr in persisted:
+                fr.unpersist()
+
+        # manifest update: per-part verdict = all rules passed
+        by_part: dict[int, dict[str, dict]] = {}
+        for v in verdict_rows:
+            by_part.setdefault(int(v["part_id"]), {})[v["rule_id"]] = v
+        for pid in pending:
+            info = self.table.partition_info(pid)
+            rules_v = by_part.get(pid, {})
+            ok = all(v["passed"] for v in rules_v.values()) and len(rules_v) == len(
+                self.rules
+            )
+            metrics = {rid: float(v["metric"] or 0.0) for rid, v in rules_v.items()}
+            self.manifest.record(
+                pid,
+                info.snapshot_id,
+                list(info.files),
+                self.rules,
+                metrics,
+                "pass" if ok else "fail",
+            )
+        self.manifest.save()
+        return SuiteResult(
+            verdict_rows, violations, pending, skipped, rows_validated,
+            extras={"rule_secs": rule_secs},
+        )
+
+    def _evaluate(self, df, shared, pending, skipped, persisted):
+        """Evaluate every rule over ``df`` and write the sinks. Appends each
+        frame it persists to ``persisted`` for the caller to release ->
+        (verdict rows, violations, rows validated, per-rule seconds)."""
         ctx = RuleContext(
             spark=self.spark,
             allowed_sources=self.allowed_sources,
@@ -154,12 +195,15 @@ class ValidationRunner:
                     .filter(F.col("__rn") <= int(viol_cap))
                     .drop("__rn")
                 )
+            if res.stats is not None:
+                persisted.append(res.stats)
             viol = v.persist(StorageLevel.MEMORY_AND_DISK)
+            persisted.append(viol)
             rows = [r.asDict() for r in res.verdicts.collect()]
             # wall time to a materialized verdict (rules run concurrently,
             # so these overlap — they are per-rule latencies, not a sum)
             rule_secs[rule.rule_id] = round(_time.time() - t0, 3)
-            return rows, viol, res.stats
+            return rows, viol
 
         # Two-phase schedule around the ONE shared materialization:
         # phase 1 overlaps the shared token pass with everything that does
@@ -196,12 +240,9 @@ class ValidationRunner:
 
         verdict_rows: list[dict] = []
         violation_frames: list[DataFrame] = []
-        stats_frames: list[DataFrame] = []
-        for rows, viol, stats in results:
+        for rows, viol in results:
             verdict_rows.extend(rows)
             violation_frames.append(viol)
-            if stats is not None:
-                stats_frames.append(stats)
 
         violations = canonical_violations(_union_all(violation_frames))
         if self.output_dir:
@@ -289,39 +330,8 @@ class ValidationRunner:
                 "validated_parts": sorted(prev_validated | set(ran_now)),
                 "rules": {r.rule_id: r.version for r in self.rules},
             }
-            with open(metrics_path, "w") as f:
-                _json.dump(metrics, f, indent=1, sort_keys=True)
-        shared.unpersist()
-        for fr in violation_frames + stats_frames:
-            try:
-                fr.unpersist()
-            except Exception:
-                pass
-
-        # manifest update: per-part verdict = all rules passed
-        by_part: dict[int, dict[str, dict]] = {}
-        for v in verdict_rows:
-            by_part.setdefault(int(v["part_id"]), {})[v["rule_id"]] = v
-        for pid in pending:
-            info = self.table.partition_info(pid)
-            rules_v = by_part.get(pid, {})
-            ok = all(v["passed"] for v in rules_v.values()) and len(rules_v) == len(
-                self.rules
-            )
-            metrics = {rid: float(v["metric"] or 0.0) for rid, v in rules_v.items()}
-            self.manifest.record(
-                pid,
-                info.snapshot_id,
-                list(info.files),
-                self.rules,
-                metrics,
-                "pass" if ok else "fail",
-            )
-        self.manifest.save()
-        return SuiteResult(
-            verdict_rows, violations, pending, skipped, rows_validated,
-            extras={"rule_secs": rule_secs},
-        )
+            write_json_atomic(metrics_path, metrics, indent=1, sort_keys=True)
+        return verdict_rows, violations, rows_validated, rule_secs
 
     def anomaly_report(
         self, k: float = 4.0, min_history: int = 4

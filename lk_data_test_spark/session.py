@@ -39,7 +39,7 @@ def get_spark(
         .config("spark.sql.shuffle.partitions", str(shuffle_partitions))
         .config("spark.sql.adaptive.enabled", "true")
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-        # r6 config audit (scripts/ab_conf_r06.py, interleaved A/B): leaving
+        # r6 config audit (OPTIMIZATION_r06.md, interleaved A/B): leaving
         # the AQE coalescing defaults alone is deliberate —
         # minPartitionSize=64k bought ~2-5% on the headline queries but cost
         # the concurrent rule suite ~2s in task-count inflation across its

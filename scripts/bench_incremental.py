@@ -3,8 +3,8 @@
 Story being measured (the Iceberg append pattern): a 64x600000 corpus is
 fully validated once; an append adds ~10% more rows as NEW FILES inside four
 existing clean partitions (unique doc_ids, same distribution); the
-incremental validators then scan ONLY the added files and merge the stored
-mergeable state. Reports wall time + scanned rows for both runs and asserts
+incremental suite then scans ONLY the added files and merges them into the
+stored mergeable summaries. Reports wall time + scanned rows for both runs and asserts
 the mode split (4 delta partitions, 60 skipped).
 
 Run AFTER scripts/bench_scaling.py has generated the corpus:

@@ -1,56 +1,60 @@
 """File-delta incremental validation: delta-only scans, exact merges,
-full fallback on rewrite, idempotent skips."""
+full fallback on rewrite, idempotent skips — all through the one store of
+``run_incremental_suite``."""
 
 from __future__ import annotations
 
 import os
 
+import numpy as np
+
 from lk_data_test_spark.datagen import GenConfig, generate
 from lk_data_test_spark.operators.column_stats import partition_stats
+from lk_data_test_spark.plans import incremental_stats
 from lk_data_test_spark.plans.incremental_stats import (
-    IncrementalStatsValidator,
+    STORE_NAME,
     _row_to_stats,
-    merge_stats,
+    run_incremental_suite,
 )
+from lk_data_test_spark.plans.rules import RuleContext
 from lk_data_test_spark.sources.catalog import PartitionedTable
 
+_ROW = "doc_id string, tokens array<int>, n_tok int, source string"
 
-def test_merge_stats_is_exact_and_commutative():
-    a = {
-        "row_count": 10, "null_doc_id": 1, "null_source": 0, "null_n_tok": 2,
-        "null_tokens": 0, "nonpos_n_tok": 1, "len_mismatch": 3,
-        "sum_n_tok": 500, "min_n_tok": 3, "max_n_tok": 90,
-        "n_tok_hist": {"0": 4, "1": 6},
+
+def _append(spark, d, pid, rows):
+    spark.createDataFrame(rows, _ROW).coalesce(1).write.mode("append").parquet(
+        f"{d}/sequences/part_id={pid}"
+    )
+
+
+def _corpus(spark, tmp_path, cfg):
+    d = str(tmp_path / "corpus")
+    generate(spark, d, cfg)
+    return d, PartitionedTable(f"{d}/sequences")
+
+
+def _batch(spark, table, rule_mod, **ctx_kw):
+    """A fresh batch evaluation of one rule -> {part_id: (passed, metric)}.
+    Rules cache their per-partition frames (the suite runner unpersists
+    them); clear the cache so a post-append evaluation is not silently
+    served the pre-append plan (CacheManager matches by plan equality)."""
+    spark.catalog.clearCache()
+    ctx = RuleContext(spark=spark, part_ids=table.partition_ids(), **ctx_kw)
+    return {
+        int(r["part_id"]): (bool(r["passed"]), float(r["metric"]))
+        for r in rule_mod.evaluate(table.read(spark), ctx).verdicts.collect()
     }
-    b = {
-        "row_count": 5, "null_doc_id": 0, "null_source": 2, "null_n_tok": 0,
-        "null_tokens": 1, "nonpos_n_tok": 0, "len_mismatch": 0,
-        "sum_n_tok": 100, "min_n_tok": 1, "max_n_tok": 40,
-        "n_tok_hist": {"1": 2, "3": 5},
-    }
-    m = merge_stats(a, b)
-    assert m == merge_stats(b, a)
-    assert m["row_count"] == 15 and m["min_n_tok"] == 1 and m["max_n_tok"] == 90
-    assert m["n_tok_hist"] == {"0": 4, "1": 8, "3": 5}
-    empty = {
-        "row_count": 0, "null_doc_id": 0, "null_source": 0, "null_n_tok": 0,
-        "null_tokens": 0, "nonpos_n_tok": 0, "len_mismatch": 0,
-        "sum_n_tok": 0, "min_n_tok": None, "max_n_tok": None, "n_tok_hist": {},
-    }
-    assert merge_stats(a, empty) == a
 
 
 def test_incremental_stats_delta_merge(spark, tmp_path):
-    d = str(tmp_path / "corpus")
-    cfg = GenConfig(n_parts=4, rows_per_part=300)
-    generate(spark, d, cfg)
-    table = PartitionedTable(f"{d}/sequences")
-    v = IncrementalStatsValidator(table, str(tmp_path / "store.json"))
+    d, table = _corpus(spark, tmp_path, GenConfig(n_parts=4, rows_per_part=300))
+    mdir = str(tmp_path / "state")
 
     # first sight: everything full, verdicts match the batch rule's roles
     # (part_id % 5 -> 0 clean, 1 dup, 2 badcol, 3 badsrc; only badcol
     # injects column defects)
-    r1 = v.run(spark)
+    r1 = run_incremental_suite(spark, table, mdir)["column_stats"]
     assert all(m == "full" for m in r1["modes"].values())
     assert r1["scanned_rows"] == 4 * 300
     assert r1["parts"][2]["passed"] is False and r1["parts"][2]["metric"] == 8.0
@@ -59,15 +63,9 @@ def test_incremental_stats_delta_merge(spark, tmp_path):
 
     # pure append into part 1: the rerun scans ONLY the 50 added rows,
     # everything else skips, and the merged stats are bit-identical to a
-    # full recompute of the grown partition
-    extra = spark.createDataFrame(
-        [(f"X{i:04d}", [1, 2, 3], 3, "cases") for i in range(50)],
-        "doc_id string, tokens array<int>, n_tok int, source string",
-    )
-    extra.coalesce(1).write.mode("append").parquet(f"{d}/sequences/part_id=1")
-    # a second validator instance proves the state round-trips through disk
-    v2 = IncrementalStatsValidator(table, str(tmp_path / "store.json"))
-    r2 = v2.run(spark)
+    # full recompute of the grown partition (the state round-trips via disk)
+    _append(spark, d, 1, [(f"X{i:04d}", [1, 2, 3], 3, "cases") for i in range(50)])
+    r2 = run_incremental_suite(spark, table, mdir)["column_stats"]
     assert r2["modes"][1] == "delta"
     assert all(m == "skip" for p, m in r2["modes"].items() if p != 1)
     assert r2["scanned_rows"] == 50
@@ -78,7 +76,7 @@ def test_incremental_stats_delta_merge(spark, tmp_path):
     assert r2["parts"][1]["stats"] == _row_to_stats(fresh[0])
 
     # idempotent: third run reads nothing
-    r3 = v2.run(spark)
+    r3 = run_incremental_suite(spark, table, mdir)["column_stats"]
     assert all(m == "skip" for m in r3["modes"].values())
     assert r3["scanned_rows"] == 0
 
@@ -86,7 +84,7 @@ def test_incremental_stats_delta_merge(spark, tmp_path):
     pdir = f"{d}/sequences/part_id=3"
     victim = sorted(f for f in os.listdir(pdir) if f.endswith(".parquet"))[0]
     os.remove(os.path.join(pdir, victim))
-    r4 = v2.run(spark)
+    r4 = run_incremental_suite(spark, table, mdir)["column_stats"]
     assert r4["modes"][3] == "full"
     assert all(m == "skip" for p, m in r4["modes"].items() if p != 3)
 
@@ -96,41 +94,17 @@ def test_incremental_drift_delta_matches_batch(spark, tmp_path):
     per-partition verdicts; after a pure append the delta run (which scans
     only the added files' partials) matches a fresh BATCH evaluation of the
     grown table — i.e. merging partials loses nothing."""
-    import numpy as np
-
     from lk_data_test_spark.operators import drift
-    from lk_data_test_spark.plans.incremental_stats import (
-        IncrementalDriftValidator,
-    )
-    from lk_data_test_spark.plans.rules import RuleContext
 
-    d = str(tmp_path / "corpus")
-    cfg = GenConfig(n_parts=5, rows_per_part=1200)
-    generate(spark, d, cfg)
-    table = PartitionedTable(f"{d}/sequences")
+    d, table = _corpus(spark, tmp_path, GenConfig(n_parts=5, rows_per_part=1200))
     profiles = spark.read.parquet(f"{d}/reference_profiles")
-    allowed = spark.read.parquet(f"{d}/allowed_sources")
+    mdir = str(tmp_path / "state")
 
-    def batch_verdicts():
-        # drift.evaluate caches its per-group frame (the suite runner
-        # unpersists it); clear it here so the SECOND batch evaluation after
-        # the append is not silently served the pre-append cached plan
-        # (CacheManager matches by logical-plan equality)
-        spark.catalog.clearCache()
-        ctx = RuleContext(
-            spark=spark,
-            allowed_sources=allowed,
-            reference_profiles=profiles,
-            part_ids=table.partition_ids(),
-        )
-        return {
-            int(r["part_id"]): (bool(r["passed"]), float(r["metric"]))
-            for r in drift.evaluate(table.read(spark), ctx).verdicts.collect()
-        }
+    def batch():
+        return _batch(spark, table, drift, reference_profiles=profiles)
 
-    v = IncrementalDriftValidator(table, str(tmp_path / "drift_store.json"))
-    r1 = v.run(spark, profiles)
-    b1 = batch_verdicts()
+    r1 = run_incremental_suite(spark, table, mdir, profiles=profiles)["drift"]
+    b1 = batch()
     assert all(m == "full" for m in r1["modes"].values())
     assert set(r1["parts"]) == set(b1)
     # the drift role (part 4 at n_parts=5) must actually fail — otherwise
@@ -143,61 +117,41 @@ def test_incremental_drift_delta_matches_batch(spark, tmp_path):
     # pure append of distribution-shifting rows into CLEAN part 0: the
     # incremental delta result must equal a fresh batch evaluation of the
     # grown table (merge-exactness), and only part 0 may re-read anything
-    rows = [
-        (f"A{i:04d}", [3, 3, 3, 3, 3, 3, 3, 3], 8, "editions")
-        for i in range(400)
-    ]
-    spark.createDataFrame(
-        rows, "doc_id string, tokens array<int>, n_tok int, source string"
-    ).coalesce(1).write.mode("append").parquet(f"{d}/sequences/part_id=0")
-
-    v2 = IncrementalDriftValidator(table, str(tmp_path / "drift_store.json"))
-    r2 = v2.run(spark, profiles)
+    _append(spark, d, 0, [
+        (f"A{i:04d}", [3, 3, 3, 3, 3, 3, 3, 3], 8, "editions") for i in range(400)
+    ])
+    r2 = run_incremental_suite(spark, table, mdir, profiles=profiles)["drift"]
     assert r2["modes"][0] == "delta"
     assert all(m == "skip" for p, m in r2["modes"].items() if p != 0)
-    b2 = batch_verdicts()
+    b2 = batch()
     for pid, res in r2["parts"].items():
         assert res["passed"] == b2[pid][0], (pid, res, b2[pid])
         assert np.isclose(res["metric"], b2[pid][1], rtol=1e-9), pid
 
     # idempotent
-    r3 = v2.run(spark, profiles)
+    r3 = run_incremental_suite(spark, table, mdir, profiles=profiles)["drift"]
     assert all(m == "skip" for m in r3["modes"].values())
 
 
 def test_incremental_referential_and_uniqueness(spark, tmp_path):
-    """The remaining data rules go incremental too: referential metrics ADD
-    (per-row independent), the uniqueness HLL sketch UNIONS (mergeable by
-    design) with the exact hash-group pass reserved for partitions the
-    merged screen flags. Full-run and post-append delta-run verdicts both
-    match fresh batch evaluations."""
+    """Referential metrics ADD (per-row independent), the uniqueness HLL
+    sketch UNIONS (mergeable by design) with the exact hash-group pass
+    reserved for partitions the merged screen flags. Full-run and
+    post-append delta-run verdicts both match fresh batch evaluations."""
     from lk_data_test_spark.operators import referential, uniqueness
-    from lk_data_test_spark.plans.incremental_stats import (
-        IncrementalReferentialValidator,
-        IncrementalUniquenessValidator,
-    )
-    from lk_data_test_spark.plans.rules import RuleContext
 
-    d = str(tmp_path / "corpus")
-    cfg = GenConfig(n_parts=5, rows_per_part=1200)
-    generate(spark, d, cfg)
-    table = PartitionedTable(f"{d}/sequences")
+    d, table = _corpus(spark, tmp_path, GenConfig(n_parts=5, rows_per_part=1200))
     allowed = spark.read.parquet(f"{d}/allowed_sources")
+    mdir = str(tmp_path / "state")
+
+    def run():
+        out = run_incremental_suite(spark, table, mdir, allowed=allowed)
+        return out["referential"], out["uniqueness"]
 
     def batch(rule_mod):
-        spark.catalog.clearCache()
-        ctx = RuleContext(
-            spark=spark, allowed_sources=allowed,
-            part_ids=table.partition_ids(),
-        )
-        return {
-            int(r["part_id"]): (bool(r["passed"]), float(r["metric"]))
-            for r in rule_mod.evaluate(table.read(spark), ctx).verdicts.collect()
-        }
+        return _batch(spark, table, rule_mod, allowed_sources=allowed)
 
-    vr = IncrementalReferentialValidator(table, str(tmp_path / "ref.json"))
-    vu = IncrementalUniquenessValidator(table, str(tmp_path / "uniq.json"))
-    r1, u1 = vr.run(spark, allowed), vu.run(spark)
+    r1, u1 = run()
     br, bu = batch(referential), batch(uniqueness)
     # roles: part 1 dup (uniqueness fails), part 3 badsrc (referential fails)
     assert br[3][0] is False and bu[1][0] is False
@@ -211,21 +165,10 @@ def test_incremental_referential_and_uniqueness(spark, tmp_path):
 
     # appends: 60 copies of ONE doc_id into clean part 0 (uniqueness) and
     # 5 unknown-source rows into part 2 (referential)
-    spark.createDataFrame(
-        [("DUPLICATED", [1, 2], 2, "cases")] * 60,
-        "doc_id string, tokens array<int>, n_tok int, source string",
-    ).coalesce(1).write.mode("append").parquet(f"{d}/sequences/part_id=0")
-    spark.createDataFrame(
-        [(f"N{i}", [1, 2], 2, "not-a-source") for i in range(5)],
-        "doc_id string, tokens array<int>, n_tok int, source string",
-    ).coalesce(1).write.mode("append").parquet(f"{d}/sequences/part_id=2")
+    _append(spark, d, 0, [("DUPLICATED", [1, 2], 2, "cases")] * 60)
+    _append(spark, d, 2, [(f"N{i}", [1, 2], 2, "not-a-source") for i in range(5)])
 
-    r2 = IncrementalReferentialValidator(table, str(tmp_path / "ref.json")).run(
-        spark, allowed
-    )
-    u2 = IncrementalUniquenessValidator(table, str(tmp_path / "uniq.json")).run(
-        spark
-    )
+    r2, u2 = run()
     assert r2["modes"][2] == "delta" and u2["modes"][0] == "delta"
     br2, bu2 = batch(referential), batch(uniqueness)
     for pid in br2:
@@ -239,38 +182,29 @@ def test_incremental_referential_and_uniqueness(spark, tmp_path):
     assert u2["parts"][0]["metric"] == 1.0
 
     # idempotent
-    r3 = IncrementalReferentialValidator(table, str(tmp_path / "ref.json")).run(
-        spark, allowed
-    )
-    u3 = IncrementalUniquenessValidator(table, str(tmp_path / "uniq.json")).run(
-        spark
-    )
+    r3, u3 = run()
     assert all(m == "skip" for m in r3["modes"].values())
     assert all(m == "skip" for m in u3["modes"].values())
 
 
 def test_incremental_uniqueness_global_cross_partition_append(spark, tmp_path):
     """scope=global: an append into part 0 that re-uses doc_ids already
-    living in UNTOUCHED part 1 must flip part 1's verdict even though part 1
+    living in UNTOUCHED part 5 must flip part 5's verdict even though part 5
     is mode=skip (its sketch comes from the store, no scan) — the cross
     signal comes entirely from union-vs-sum over stored sketches. Local
     screens stay silent (the appended ids are unique within part 0), so only
     the global scope can catch this."""
-    from lk_data_test_spark.plans.incremental_stats import (
-        IncrementalUniquenessValidator,
-    )
+    from lk_data_test_spark.operators import uniqueness
 
-    d = str(tmp_path / "corpus")
     # parts 0 and 5 are clean-role; dup-role part 1 gets d=1 local dup
     # (0.25% — beneath every screen's resolution, so the first run passes)
-    cfg = GenConfig(n_parts=6, rows_per_part=400, dup_frac=0.0025)
-    generate(spark, d, cfg)
-    table = PartitionedTable(f"{d}/sequences")
-    store = str(tmp_path / "uniq_global.json")
+    d, table = _corpus(
+        spark, tmp_path, GenConfig(n_parts=6, rows_per_part=400, dup_frac=0.0025)
+    )
+    params = {"uniqueness": {"scope": "global"}}
+    mdir = str(tmp_path / "state")
 
-    u1 = IncrementalUniquenessValidator(table, store, scope="global").run(spark)
-    # dup-role part 1 has d=1 local dup — beneath every screen's resolution;
-    # all partitions pass on the sketch screen
+    u1 = run_incremental_suite(spark, table, mdir, params=params)["uniqueness"]
     assert all(r["passed"] for r in u1["parts"].values())
     assert all(
         r["detail"] == "path=screen scope=global" for r in u1["parts"].values()
@@ -278,14 +212,10 @@ def test_incremental_uniqueness_global_cross_partition_append(spark, tmp_path):
 
     # append 120 rows into part 0 duplicating part 5's ids (rows 200..319:
     # outside part 5's local-dup block). 120 cross ids > 3%*(2400+120) = 76
-    rows = [
+    _append(spark, d, 0, [
         (f"D0005-{i:08d}", [1, 2], 2, "cases") for i in range(200, 320)
-    ]
-    spark.createDataFrame(
-        rows, "doc_id string, tokens array<int>, n_tok int, source string"
-    ).coalesce(1).write.mode("append").parquet(f"{d}/sequences/part_id=0")
-
-    u2 = IncrementalUniquenessValidator(table, store, scope="global").run(spark)
+    ])
+    u2 = run_incremental_suite(spark, table, mdir, params=params)["uniqueness"]
     assert u2["modes"][0] == "delta"
     assert all(m == "skip" for p, m in u2["modes"].items() if p != 0)
     # the cross signal widens the exact pass to every partition
@@ -303,19 +233,7 @@ def test_incremental_uniqueness_global_cross_partition_append(spark, tmp_path):
         assert u2["parts"][pid]["passed"] is True, pid
 
     # matches a fresh batch evaluation at global scope
-    from lk_data_test_spark.operators import uniqueness
-    from lk_data_test_spark.plans.rules import RuleContext
-
-    spark.catalog.clearCache()
-    ctx = RuleContext(
-        spark=spark,
-        part_ids=table.partition_ids(),
-        params={"uniqueness": {"scope": "global"}},
-    )
-    batch = {
-        int(r["part_id"]): (bool(r["passed"]), float(r["metric"]))
-        for r in uniqueness.evaluate(table.read(spark), ctx).verdicts.collect()
-    }
+    batch = _batch(spark, table, uniqueness, params=params)
     for pid, res in u2["parts"].items():
         assert res["passed"] == batch[pid][0], pid
         assert res["metric"] == batch[pid][1], pid
@@ -326,29 +244,15 @@ def test_incremental_token_bounds_delta_adds(spark, tmp_path):
     delta OOV-row counts to the stored metric; full-run and post-append
     delta-run both match a fresh batch evaluation; reruns skip."""
     from lk_data_test_spark.operators import token_bounds
-    from lk_data_test_spark.plans.incremental_stats import (
-        IncrementalTokenBoundsValidator,
-    )
-    from lk_data_test_spark.plans.rules import RuleContext
 
-    d = str(tmp_path / "corpus")
-    cfg = GenConfig(n_parts=5, rows_per_part=1200)
-    generate(spark, d, cfg)
-    table = PartitionedTable(f"{d}/sequences")
+    d, table = _corpus(spark, tmp_path, GenConfig(n_parts=5, rows_per_part=1200))
+    mdir = str(tmp_path / "state")
 
-    def batch():
-        spark.catalog.clearCache()
-        ctx = RuleContext(spark=spark, part_ids=table.partition_ids())
-        return {
-            int(r["part_id"]): (bool(r["passed"]), float(r["metric"]))
-            for r in token_bounds.evaluate(
-                table.read(spark), ctx
-            ).verdicts.collect()
-        }
+    def run():
+        return run_incremental_suite(spark, table, mdir)["token_bounds"]
 
-    store = str(tmp_path / "tb.json")
-    v1 = IncrementalTokenBoundsValidator(table, store).run(spark)
-    b1 = batch()
+    v1 = run()
+    b1 = _batch(spark, table, token_bounds)
     assert b1[2][0] is False and b1[2][1] == 5.0  # badcol role plants 5
     for pid in b1:
         assert v1["parts"][pid]["passed"] == b1[pid][0]
@@ -356,170 +260,133 @@ def test_incremental_token_bounds_delta_adds(spark, tmp_path):
 
     # append 3 rows with OOV tokens into CLEAN part 0 and 2 clean rows
     # into failing part 2 (metric must stay 5 there, grow to 3 in part 0)
-    spark.createDataFrame(
-        [(f"O{i}", [1, 40000 + i], 2, "cases") for i in range(3)],
-        "doc_id string, tokens array<int>, n_tok int, source string",
-    ).coalesce(1).write.mode("append").parquet(f"{d}/sequences/part_id=0")
-    spark.createDataFrame(
-        [(f"C{i}", [1, 2, 3], 3, "cases") for i in range(2)],
-        "doc_id string, tokens array<int>, n_tok int, source string",
-    ).coalesce(1).write.mode("append").parquet(f"{d}/sequences/part_id=2")
+    _append(spark, d, 0, [(f"O{i}", [1, 40000 + i], 2, "cases") for i in range(3)])
+    _append(spark, d, 2, [(f"C{i}", [1, 2, 3], 3, "cases") for i in range(2)])
 
-    v2 = IncrementalTokenBoundsValidator(table, store).run(spark)
+    v2 = run()
     assert v2["modes"][0] == "delta" and v2["modes"][2] == "delta"
-    b2 = batch()
+    b2 = _batch(spark, table, token_bounds)
     assert b2[0] == (False, 3.0) and b2[2] == (False, 5.0)
     for pid in b2:
         assert v2["parts"][pid]["passed"] == b2[pid][0], pid
         assert v2["parts"][pid]["metric"] == b2[pid][1], pid
 
-    v3 = IncrementalTokenBoundsValidator(table, store).run(spark)
+    v3 = run()
     assert all(m == "skip" for m in v3["modes"].values())
     assert v3["parts"][0]["metric"] == 3.0
 
 
 def test_skip_runs_do_no_work(spark, tmp_path, monkeypatch):
-    """An all-skip rerun must be scan-free AND rescore-free: the uniqueness
-    exact pass reuses the stored per-partition dup count (pure function of
-    the unchanged file set) and the drift scorer reuses the stored metric
-    under a matching (profiles, params) fingerprint. At 10^6 partitions the
-    pre-memoization behavior — replaying the exact pass over every flagged
-    partition and re-scoring every histogram — dominates an otherwise
-    O(delta) rerun."""
+    """An all-skip rerun must be scan-free, rescore-free and write-free: the
+    uniqueness exact pass reuses the stored per-partition dup count (pure
+    function of the unchanged file set) and the drift scorer reuses the
+    stored metric under a matching (profiles, params) fingerprint. At 10^6
+    partitions replaying the exact pass over every flagged partition and
+    re-scoring every histogram would dominate an otherwise O(delta) rerun."""
+    import lk_data_test_spark.operators.drift as drift_mod
     import lk_data_test_spark.operators.uniqueness as uniq_mod
-    from lk_data_test_spark.plans.incremental_stats import (
-        IncrementalDriftValidator,
-        IncrementalUniquenessValidator,
-    )
 
-    d = str(tmp_path / "corpus")
-    cfg = GenConfig(n_parts=5, rows_per_part=1200)
-    generate(spark, d, cfg)
-    table = PartitionedTable(f"{d}/sequences")
+    d, table = _corpus(spark, tmp_path, GenConfig(n_parts=5, rows_per_part=1200))
     profiles = spark.read.parquet(f"{d}/reference_profiles")
+    mdir = str(tmp_path / "state")
+    store = os.path.join(mdir, STORE_NAME)
 
-    ustore = str(tmp_path / "uniq.json")
-    dstore = str(tmp_path / "drift.json")
-    u1 = IncrementalUniquenessValidator(table, ustore).run(spark)
-    d1 = IncrementalDriftValidator(table, dstore).run(spark, profiles)
+    s1 = run_incremental_suite(spark, table, mdir, profiles=profiles)
+    u1, d1 = s1["uniqueness"], s1["drift"]
     assert u1["parts"][1]["detail"] == "path=exact"  # dup role got flagged
+    written = os.stat(store).st_mtime_ns
 
     def boom(*a, **k):
-        raise AssertionError("exact pass ran on an all-skip rerun")
+        raise AssertionError("exact pass or rescoring ran on an all-skip rerun")
 
     monkeypatch.setattr(uniq_mod, "duplicate_doc_ids", boom)
-    monkeypatch.setattr(IncrementalDriftValidator, "_score", boom)
+    monkeypatch.setattr(drift_mod, "group_scorer", boom)
+    monkeypatch.setattr(incremental_stats, "_summarize", boom)
 
-    u2 = IncrementalUniquenessValidator(table, ustore).run(spark)
-    d2 = IncrementalDriftValidator(table, dstore).run(spark, profiles)
+    s2 = run_incremental_suite(spark, table, mdir, profiles=profiles)
+    u2, d2 = s2["uniqueness"], s2["drift"]
     assert all(m == "skip" for m in u2["modes"].values())
     assert all(m == "skip" for m in d2["modes"].values())
     for pid in u1["parts"]:
         assert u2["parts"][pid]["metric"] == u1["parts"][pid]["metric"]
         assert u2["parts"][pid]["detail"] == u1["parts"][pid]["detail"]
         assert d2["parts"][pid]["metric"] == d1["parts"][pid]["metric"]
+    assert os.stat(store).st_mtime_ns == written
 
     # a params change invalidates the drift fingerprint: the skip run then
     # RE-SCORES from stored partials (no scan) instead of reusing the memo —
     # proven via a sentinel scorer that must be consulted
     monkeypatch.setattr(
-        IncrementalDriftValidator, "_score", lambda self, *a, **k: 42.0
+        drift_mod, "group_scorer",
+        lambda *a, **k: lambda source, *g: (0.0, 0.0, 1e9, 42.0),
     )
-    d3 = IncrementalDriftValidator(
-        table, dstore, params={"ks_threshold": 0.5}
-    ).run(spark, profiles)
+    d3 = run_incremental_suite(
+        spark, table, mdir, profiles=profiles,
+        params={"drift": {"ks_threshold": 0.5}},
+    )["drift"]
     assert all(m == "skip" for m in d3["modes"].values())
     assert all(r["metric"] == 42.0 for r in d3["parts"].values())
 
 
-def test_fused_suite_equals_separate_validators(spark, tmp_path, monkeypatch):
-    """run_incremental_suite fuses the three tokens-reading validators onto
-    ONE SharedTokenStats pass per scanned frame. Equivalence contract: the
-    fused results (modes, metrics, verdicts, merged stats) are identical to
-    each validator running its own scan, on first sight AND on an append
-    delta — and under fusion the per-validator scan methods are never
-    called (proven with raising sentinels)."""
-    from lk_data_test_spark.plans.incremental_stats import (
-        IncrementalDriftValidator,
-        IncrementalTokenBoundsValidator,
-        run_incremental_suite,
-    )
+def test_incremental_suite_matches_forced_runner(spark, tmp_path, monkeypatch):
+    """On first sight and after an append, each of the five data rules'
+    incremental verdict equals a forced ValidationRunner.run over the same
+    table (drift's metric within rtol=1e-9: the batch rule sums in a
+    shuffled group, the store in sorted order). Each run lists and
+    classifies the partitions once, and the whole state is one store file."""
+    from lk_data_test_spark.plans.runner import ValidationRunner
 
-    d = str(tmp_path / "corpus")
-    cfg = GenConfig(n_parts=5, rows_per_part=400)
-    generate(spark, d, cfg)
-    table = PartitionedTable(f"{d}/sequences")
+    d, table = _corpus(spark, tmp_path, GenConfig(n_parts=5, rows_per_part=400))
     profiles = spark.read.parquet(f"{d}/reference_profiles")
     allowed = spark.read.parquet(f"{d}/allowed_sources")
-    fdir, sdir = str(tmp_path / "fused"), str(tmp_path / "sep")
+    mdir = str(tmp_path / "state")
 
-    def run_separate():
-        return {
-            "column_stats": IncrementalStatsValidator(
-                table, os.path.join(sdir, "incremental_stats.json")
-            ).run(spark),
-            "drift": IncrementalDriftValidator(
-                table, os.path.join(sdir, "incremental_drift.json")
-            ).run(spark, profiles),
-            "token_bounds": IncrementalTokenBoundsValidator(
-                table, os.path.join(sdir, "incremental_token_bounds.json")
-            ).run(spark),
-        }
-
-    def run_fused():
-        with monkeypatch.context() as m:
-            def boom(*a, **k):
-                raise AssertionError("per-validator scan ran under fusion")
-
-            m.setattr(IncrementalStatsValidator, "_stats_for", boom)
-            m.setattr(IncrementalDriftValidator, "_partials_for", boom)
-            m.setattr(IncrementalTokenBoundsValidator, "_counts", boom)
-            return run_incremental_suite(
-                spark, table, fdir, profiles=profiles, allowed=allowed
-            )
-
-    def check(fused, sep):
-        for rule in ("column_stats", "drift", "token_bounds"):
-            fp, sp = fused[rule]["parts"], sep[rule]["parts"]
-            assert set(fp) == set(sp), rule
-            for pid in fp:
-                assert fp[pid] == sp[pid], (rule, pid, fp[pid], sp[pid])
-
-    sep1 = run_separate()
-    fused1 = run_fused()
-    check(fused1, sep1)
-    assert fused1["column_stats"]["scanned_rows"] == 5 * 400
-    # the suite also ran the two narrow validators
-    assert set(fused1["uniqueness"]["parts"]) == set(range(5))
-    assert set(fused1["referential"]["parts"]) == set(range(5))
-
-    # pure append: OOV rows into clean part 0, clean rows into part 3
-    spark.createDataFrame(
-        [(f"O{i}", [1, 40000 + i], 2, "cases") for i in range(3)],
-        "doc_id string, tokens array<int>, n_tok int, source string",
-    ).coalesce(1).write.mode("append").parquet(f"{d}/sequences/part_id=0")
-    spark.createDataFrame(
-        [(f"C{i}", [1, 2, 3], 3, "cases") for i in range(2)],
-        "doc_id string, tokens array<int>, n_tok int, source string",
-    ).coalesce(1).write.mode("append").parquet(f"{d}/sequences/part_id=3")
-
-    sep2 = run_separate()
-    fused2 = run_fused()
-    check(fused2, sep2)
-    assert fused2["column_stats"]["modes"][0] == "delta"
-    assert fused2["token_bounds"]["parts"][0]["metric"] == 3.0
-    assert fused2["column_stats"]["scanned_rows"] == 5  # only the added rows
-
-    # classification disagreement -> fusion disengages, each validator falls
-    # back to its own scan and the run still completes correctly
-    os.remove(os.path.join(fdir, "incremental_drift.json"))
-    fused3 = run_incremental_suite(
-        spark, table, fdir, profiles=profiles, allowed=allowed
+    calls = []
+    classify = incremental_stats.classify_partitions
+    monkeypatch.setattr(
+        incremental_stats, "classify_partitions",
+        lambda *a: calls.append(1) or classify(*a),
     )
-    assert all(m == "full" for m in fused3["drift"]["modes"].values())
-    assert all(m == "skip" for m in fused3["column_stats"]["modes"].values())
-    for pid in fused3["drift"]["parts"]:
-        assert (
-            fused3["drift"]["parts"][pid]["metric"]
-            == sep2["drift"]["parts"][pid]["metric"]
+
+    def check():
+        calls.clear()
+        inc = run_incremental_suite(
+            spark, table, mdir, profiles=profiles, allowed=allowed
         )
+        assert len(calls) == 1
+        assert os.listdir(mdir) == [STORE_NAME]
+        spark.catalog.clearCache()
+        res = ValidationRunner(
+            spark, table, allowed, profiles,
+            manifest_path=str(tmp_path / "runner" / "manifest.json"),
+        ).run(force=True)
+        batch = {(v["part_id"], v["rule_id"]): v for v in res.verdicts}
+        rules = ("column_stats", "token_bounds", "uniqueness", "referential", "drift")
+        assert set(inc) == set(rules)
+        for rule in rules:
+            for pid, r in inc[rule]["parts"].items():
+                b = batch[(pid, rule)]
+                assert r["passed"] == b["passed"], (rule, pid)
+                if rule == "drift":
+                    assert np.isclose(r["metric"], b["metric"], rtol=1e-9), pid
+                else:
+                    assert r["metric"] == b["metric"], (rule, pid)
+        return inc
+
+    first = check()
+    assert all(m == "full" for m in first["column_stats"]["modes"].values())
+    assert first["column_stats"]["scanned_rows"] == 5 * 400
+
+    # pure append into clean part 0: OOV tokens (token_bounds), an unknown
+    # source (referential) and 40 copies of one doc_id (uniqueness)
+    _append(spark, d, 0, [(f"O{i}", [1, 40000 + i], 2, "cases") for i in range(3)]
+            + [(f"N{i}", [1, 2], 2, "not-a-source") for i in range(2)]
+            + [("DUPLICATED", [1, 2, 3], 3, "cases")] * 40)
+    second = check()
+    modes = second["column_stats"]["modes"]
+    assert modes[0] == "delta"
+    assert all(m == "skip" for p, m in modes.items() if p != 0)
+    assert second["column_stats"]["scanned_rows"] == 45
+    assert second["token_bounds"]["parts"][0]["metric"] == 3.0
+    assert second["referential"]["parts"][0]["metric"] == 2.0
+    assert second["uniqueness"]["parts"][0]["metric"] == 1.0

@@ -1484,3 +1484,38 @@ def test_exact_pair_scorer_hot_cell_guard_trips(spark):
     # and the same corpus under the default bound still scores fine
     ok = _cogroup_cosine_pairs(q, build, "cell", 0.5)
     assert ok.count() == 40 * 39 // 2
+
+
+def test_fan_out_probes_once_per_table_version(spark, tmp_path, monkeypatch):
+    """A single-reader table at or above _FAN_MIN_BYTES is round-robin
+    repartitioned to the default parallelism (sizes mocked: the branch
+    needs a 64 MB input). The probe runs once per table version: a second
+    read reuses the decision, a rewrite of the file probes again."""
+    from lk_data_test_spark import entry_queries as eq
+
+    path = str(tmp_path / "t.parquet")
+    spark.range(1000).coalesce(1).write.parquet(path)
+    sizes = []
+
+    def fake_getsize(f):
+        sizes.append(f)
+        return eq._FAN_MIN_BYTES
+
+    monkeypatch.setattr(eq.os.path, "getsize", fake_getsize)
+    target = spark.sparkContext.defaultParallelism
+    assert target > 1
+
+    df = eq._t(spark, str(tmp_path), "t")
+    assert df.rdd.getNumPartitions() == target
+    assert sizes  # probed
+    n = len(sizes)
+    assert eq._t(spark, str(tmp_path), "t").rdd.getNumPartitions() == target
+    assert len(sizes) == n  # decision reused, no probe
+
+    # rewrite -> new file stamp -> probed again; a size under the floor
+    # now leaves the single reader alone
+    spark.range(500).coalesce(1).write.mode("overwrite").parquet(path)
+    monkeypatch.setattr(eq.os.path, "getsize", lambda f: sizes.append(f) or 1)
+    df = eq._t(spark, str(tmp_path), "t")
+    assert len(sizes) > n
+    assert df.rdd.getNumPartitions() == 1

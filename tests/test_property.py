@@ -98,3 +98,93 @@ def test_ks_hist_matches_naive_ecdf(values, shift):
     ecdf_lo = first_idx / n
     naive = max(np.max(np.abs(ecdf_hi - f_ref)), np.max(np.abs(ecdf_lo - f_ref)))
     assert abs(got - naive) < 1e-9
+
+
+# ---- the incremental store's merges (plans/incremental_stats.py) ----------
+# A full run merges fresh summaries into the empty summary and an append
+# merges the added files' summaries into the stored ones, so every merge
+# must be associative and commutative with the empty summary as identity.
+
+_counts = st.integers(min_value=0, max_value=10**12)
+_maybe_ntok = st.none() | st.integers(min_value=-10**6, max_value=10**6)
+
+
+@st.composite
+def _stats(draw):
+    from lk_data_test_spark.plans.incremental_stats import empty_stats
+
+    d = {k: draw(_counts) for k in empty_stats() if k not in (
+        "min_n_tok", "max_n_tok", "n_tok_hist")}
+    d["min_n_tok"] = draw(_maybe_ntok)
+    d["max_n_tok"] = draw(_maybe_ntok)
+    d["n_tok_hist"] = draw(st.dictionaries(
+        st.integers(min_value=-1, max_value=200).map(str), _counts, max_size=8))
+    return d
+
+
+# canonical partials: sorted, one row per (source, kind, key)
+_partials = st.dictionaries(
+    st.tuples(st.sampled_from(["cases", "editions", "letters"]),
+              st.sampled_from([0, 1]), st.integers(min_value=0, max_value=50)),
+    st.integers(min_value=1, max_value=10**9),
+    max_size=12,
+).map(lambda d: [[s, k, key, c] for (s, k, key), c in sorted(d.items())])
+
+
+@st.composite
+def _summaries(draw):
+    return {
+        "stats": draw(_stats()),
+        "partials": draw(_partials),
+        "token_bounds": draw(_counts),
+        "referential": draw(_counts),
+    }
+
+
+def _assert_monoid(merge, empty, a, b, c):
+    assert merge(a, b) == merge(b, a)
+    assert merge(merge(a, b), c) == merge(a, merge(b, c))
+    assert merge(a, empty) == a and merge(empty, a) == a
+
+
+@settings(max_examples=60, deadline=None)
+@given(_stats(), _stats(), _stats())
+def test_merge_stats_is_exact_commutative_monoid(a, b, c):
+    from lk_data_test_spark.plans.incremental_stats import empty_stats, merge_stats
+
+    _assert_monoid(merge_stats, empty_stats(), a, b, c)
+    m = merge_stats(a, b)
+    for k in ("row_count", "null_doc_id", "null_tokens", "len_mismatch", "sum_n_tok"):
+        assert m[k] == a[k] + b[k]
+    lows = [v for v in (a["min_n_tok"], b["min_n_tok"]) if v is not None]
+    highs = [v for v in (a["max_n_tok"], b["max_n_tok"]) if v is not None]
+    assert m["min_n_tok"] == (min(lows) if lows else None)
+    assert m["max_n_tok"] == (max(highs) if highs else None)
+    for k in set(a["n_tok_hist"]) | set(b["n_tok_hist"]):
+        assert m["n_tok_hist"][k] == a["n_tok_hist"].get(k, 0) + b["n_tok_hist"].get(k, 0)
+
+
+@settings(max_examples=60, deadline=None)
+@given(_partials, _partials, _partials)
+def test_merge_partials_is_commutative_monoid(a, b, c):
+    from lk_data_test_spark.plans.incremental_stats import merge_partials
+
+    _assert_monoid(merge_partials, [], a, b, c)
+    total = sum(r[3] for r in a) + sum(r[3] for r in b)
+    assert sum(r[3] for r in merge_partials(a, b)) == total
+
+
+@settings(max_examples=60, deadline=None)
+@given(_summaries(), _summaries(), _summaries())
+def test_merge_summaries_is_commutative_monoid(a, b, c):
+    """The whole per-partition summary, including the additive
+    token_bounds and referential counts."""
+    from lk_data_test_spark.plans.incremental_stats import (
+        empty_summary,
+        merge_summaries,
+    )
+
+    _assert_monoid(merge_summaries, empty_summary(True, True), a, b, c)
+    m = merge_summaries(a, b)
+    assert m["token_bounds"] == a["token_bounds"] + b["token_bounds"]
+    assert m["referential"] == a["referential"] + b["referential"]

@@ -164,3 +164,63 @@ def test_token_digest_invariant(spark, corpus_dir):
     d1 = token_digests(df).orderBy("doc_id", "token_digest").collect()
     d2 = token_digests(df).orderBy("doc_id", "token_digest").collect()
     assert d1 == d2 and len(d1) == TEST_CFG.n_parts * TEST_CFG.rows_per_part
+
+
+def _persisted_rdds(spark) -> int:
+    return spark.sparkContext._jsc.getPersistentRDDs().size()
+
+
+def test_rule_that_raises_releases_frames_and_keeps_manifest(
+    spark, corpus_dir, tmp_path
+):
+    """A rule whose evaluate raises: the exception propagates, every frame
+    the run persisted (the shared token partials, each rule's violations
+    and stats) is released, and the manifest is left as it was."""
+    import pytest
+
+    from lk_data_test_spark.plans.rules import Rule, default_rules
+
+    _runner(spark, corpus_dir, tmp_path).run()
+    manifest = tmp_path / "manifest.json"
+    before_manifest = manifest.read_bytes()
+
+    def boom(df, ctx):
+        raise RuntimeError("rule exploded")
+
+    runner = _runner(spark, corpus_dir, tmp_path)
+    runner.rules = default_rules() + [Rule("boom", "1.0", boom)]
+    spark.catalog.clearCache()
+    before = _persisted_rdds(spark)
+    with pytest.raises(RuntimeError, match="rule exploded"):
+        runner.run(force=True)
+    assert _persisted_rdds(spark) == before
+    assert manifest.read_bytes() == before_manifest
+
+
+def test_failed_metrics_dump_keeps_previous_metrics_json(
+    spark, corpus_dir, tmp_path, monkeypatch
+):
+    """metrics.json is replaced atomically: a dump that fails half-way
+    leaves the previous file intact and no temporary file behind."""
+    import json
+
+    import pytest
+
+    _runner(spark, corpus_dir, tmp_path).run()
+    out = tmp_path / "out"
+    before = (out / "metrics.json").read_bytes()
+    json.loads(before)
+
+    real_dump = json.dump
+
+    def failing_dump(obj, f, **kw):
+        if "rows_validated" in obj:
+            f.write('{"rows_validated": ')
+            raise OSError("disk full")
+        return real_dump(obj, f, **kw)
+
+    monkeypatch.setattr(json, "dump", failing_dump)
+    with pytest.raises(OSError, match="disk full"):
+        _runner(spark, corpus_dir, tmp_path).run(force=True)
+    assert (out / "metrics.json").read_bytes() == before
+    assert sorted(p.name for p in out.iterdir() if p.is_file()) == ["metrics.json"]
